@@ -235,10 +235,18 @@ def repetition_features(
         lambda cols: F.struct(*[cols[n].alias(n) for n in names]))
     # two projections: the struct computes once (CollapseProject keeps
     # a multiply-referenced non-trivial alias un-inlined), the outer
-    # select fans its fields out into the documented flat columns
+    # select fans its fields out into the documented flat columns. An
+    # input that already carries signal columns (a keep_signals=True
+    # output fed back in) has them replaced, not duplicated; the temp
+    # name avoids every input column (Spark matches names ignoring case)
+    taken = {c.lower() for c in df.columns}
     tmp = "__jss_rep_sig"
+    while tmp in taken:
+        tmp += "_"
+    replaced = {n.lower() for n in names}
+    keep = [c for c in df.columns if c.lower() not in replaced]
     return (df.withColumn(tmp, sig)
-              .select(*df.columns,
+              .select(*keep,
                       *[F.col(tmp)[n].alias(n) for n in names])
             )
 

@@ -7,7 +7,21 @@ code-generated, no Python on the hot path. Two instance encodings:
 * **variant mode** (:class:`VariantCompiler`): the document is a JSON
   string column parsed once via ``F.try_parse_json``; keyword checks
   use ``try_variant_get`` / ``schema_of_variant`` / ``is_variant_null``
-  so absent-vs-JSON-null and per-value dynamic types are exact.
+  so absent-vs-JSON-null and per-value dynamic types are exact. Given a
+  :class:`SlotSink` (``SparkValidator.apply_json``), the compiler
+  extracts each variant path once: the parse, every property
+  navigation, type tag and typed cast become named slot columns, added
+  by one ``withColumns`` projection per nesting depth, and each check's
+  ``fail`` bit is one more slot that ``ok_of`` and ``violations_array``
+  share. Inline, every keyword re-derived its own copies — whole-stage
+  codegen skips a projection holding higher-order functions
+  (``CodegenFallback``) and subexpression elimination does not reach
+  into ``CASE WHEN`` branches. Two invariants: nothing built from a
+  higher-order lambda variable is hoisted (lambda scope), and only
+  total expressions are (``try_variant_get``, ``schema_of_variant``,
+  ``try_cast``), because a slot runs on every row, also where the guard
+  of its use is false. Without a sink (``json_columns``, which has no
+  DataFrame to project onto) the same checks are inline expressions.
 * **typed-row mode** (:class:`TypedRowCompiler`): the "document" is the
   row of a typed DataFrame (the Iceberg source-code table of
   BASELINE.json's input_hint); property subschemas bind to real columns
@@ -27,12 +41,12 @@ Catalyst taking the role of its runtime (SURVEY.md §4.1).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from decimal import Decimal
 from functools import reduce
-from typing import Any, Callable, Optional
+from typing import Any, Callable, Iterable, Optional
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..core.jsonvalue import to_decimal
@@ -42,7 +56,8 @@ from ..core.registry import SchemaCompileError, SchemaRegistry
 from ..functions.formats import (FORMAT_REGEXES, JavaOnlyRegex,
                                  JavaRegexError, compile_java_pattern)
 
-__all__ = ["Check", "ExprUnsupported", "VariantCompiler", "TypedRowCompiler", "DEC"]
+__all__ = ["Check", "ExprUnsupported", "SlotSink", "VariantCompiler", "TypedRowCompiler",
+           "DEC"]
 
 DEC = "decimal(38,18)"  # exact-decimal keyword arithmetic (SURVEY §1.1)
 
@@ -177,6 +192,86 @@ def msg_col(kind: str, *args) -> "str | Column":
     if last < len(tmpl):
         parts.append(F.lit(tmpl[last:]))
     return F.concat(*parts)
+
+
+class SlotSink:
+    """Named columns for the per-row extractions a :class:`VariantCompiler`
+    hoists out of its check expressions (navigation, type tags, typed
+    casts), so each is computed once per row instead of once per use.
+
+    A slot is keyed by structure — the parent slot's key, the operation
+    and its argument (JSON path segment, target type) — never by the
+    rendered Column string, which Catalyst truncates. A slot sits one
+    projection deeper than the deepest slot it reads; :meth:`project`
+    adds them with one ``withColumns`` per depth. Names avoid every
+    column of the input (``taken``), ignoring case as Spark does."""
+
+    def __init__(self, taken: Iterable[str]):
+        self._taken = {c.lower() for c in taken}
+        # key -> (name, expr, depth, ref); ref is the Column handed out,
+        # held here so its id() stays unique for the sink's lifetime
+        self._slots: dict[tuple, tuple[str, Column, int, Column]] = {}
+        self._keys: dict[int, tuple] = {}  # id(ref) -> key
+        self._reads: list[Column] = []  # every ref handed out, in order
+
+    def _fresh(self, stem: str) -> str:
+        name, n = stem, 0
+        while name.lower() in self._taken:
+            n += 1
+            name = f"{stem}_{n}"
+        self._taken.add(name.lower())
+        return name
+
+    def _add(self, key: tuple, name: str, expr: Column, depth: int) -> Column:
+        ref = F.col(name)
+        self._slots[key] = (name, expr, depth, ref)
+        self._keys[id(ref)] = key
+        self._reads.append(ref)
+        return ref
+
+    def root(self, expr: Column) -> Column:
+        """The document slot (depth 1) every other slot derives from."""
+        return self._add(("root",), self._fresh("__jss_variant"), expr, 1)
+
+    def key_of(self, col: Column) -> Optional[tuple]:
+        """The slot key of ``col``, or None when it is not a slot ref."""
+        return self._keys.get(id(col))
+
+    def hoist(self, parent: Column, op: Any, build: Callable[[], Column]) -> Column:
+        """The slot for ``op`` applied to slot ``parent``; ``build`` runs
+        on first use only, and must obtain every slot it reads through
+        this sink while it runs — those reads set the slot's depth."""
+        key = (self.key_of(parent), op)
+        hit = self._slots.get(key)
+        if hit is not None:
+            self._reads.append(hit[3])
+            return hit[3]
+        mark = len(self._reads)
+        expr = build()
+        depth = 1 + max(self._slots[self.key_of(c)][2]
+                        for c in (parent, *self._reads[mark:]))
+        return self._add(key, self._fresh(f"__jss_s{len(self._slots)}"), expr, depth)
+
+    def hoist_fails(self, checks: list[Check]) -> list[Check]:
+        """``checks`` with each ``fail`` bit a slot, one projection past
+        the deepest extraction: ``ok_of`` and ``violations_array`` then
+        read one computed bit instead of each evaluating the check."""
+        depth = 1 + max(s[2] for s in self._slots.values())
+        return [replace(c, fail=self._add(("fail", i), self._fresh(f"__jss_f{i}"),
+                                          c.fail, depth))
+                for i, c in enumerate(checks)]
+
+    @property
+    def names(self) -> list[str]:
+        return [s[0] for s in self._slots.values()]
+
+    def project(self, df: DataFrame) -> DataFrame:
+        by_depth: dict[int, dict[str, Column]] = {}
+        for name, expr, depth, _ in self._slots.values():
+            by_depth.setdefault(depth, {})[name] = expr
+        for d in sorted(by_depth):
+            df = df.withColumns(by_depth[d])
+        return df
 
 
 _SCALAR = ("string", "number", "integer", "boolean", "null")
@@ -828,17 +923,49 @@ class _BaseCompiler:
 
 class VariantCompiler(_BaseCompiler):
     """JSON-string mode: value = a VariantType Column (possibly NULL =
-    absent). Type tests use ``schema_of_variant``; JSON null is VOID."""
+    absent). Type tests use ``schema_of_variant``; JSON null is VOID.
+
+    With a :class:`SlotSink`, every per-row extraction of a value that
+    is itself a slot (navigation, type tag, typed cast) becomes a slot:
+    the checks read named columns, one projection per nesting depth.
+    Two invariants keep that sound. Lambda scope: a value derived from
+    a higher-order lambda variable is never a slot, so nothing built
+    from it is hoisted and the lambda body stays inline. Totality: only
+    ``try_variant_get`` / ``schema_of_variant`` / ``try_cast``
+    expressions (and total combinations of them) are hoisted, because
+    a slot is computed on every row, also where the guard of its use
+    is false, and must never throw under ANSI."""
 
     # value = Column of VariantType
+
+    def __init__(self, *args, slots: Optional[SlotSink] = None, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._slots = slots
+
+    def _memo(self, v: Column, op: Any, build: Callable[[], Column],
+              when: Optional[str] = None) -> Column:
+        """``build()`` as a slot when ``v`` is a slot, inline otherwise.
+        ``build`` must be total (see the class docstring). A slot runs on
+        every row, so ``when`` — the JSON type every use of a typed cast
+        already tests for — keeps it from casting values of other types
+        (a string cast to double is a parse that throws and catches)."""
+        if self._slots is None or self._slots.key_of(v) is None:
+            return build()
+        if when is None:
+            return self._slots.hoist(v, op, build)
+        return self._slots.hoist(
+            v, op, lambda: F.when(self.v_type_is(v, when), build()))
 
     def v_present(self, v: Column) -> Column:
         return v.isNotNull()
 
     def _vt(self, v: Column) -> Column:
-        return F.schema_of_variant(v)
+        return self._memo(v, "type", lambda: F.schema_of_variant(v))
 
     def v_type_is(self, v: Column, t: str) -> Column:
+        return self._memo(v, ("is", t), lambda: self._type_test(v, t))
+
+    def _type_test(self, v: Column, t: str) -> Column:
         vt = self._vt(v)
         if t == "string":
             return _nn(vt == "STRING")
@@ -851,27 +978,29 @@ class VariantCompiler(_BaseCompiler):
         if t == "object":
             return _nn(vt.startswith("OBJECT"))
         if t == "number":
-            return self.v_is_number(v)
+            return _nn((vt == "BIGINT") | (vt == "DOUBLE") | (vt == "FLOAT")
+                       | vt.startswith("DECIMAL"))
         if t == "integer":
+            # a BIGINT is integral without the decimal remainder
             frac_zero = self._num_check(v, lambda n: n % F.lit(1).cast(DEC) == 0)
-            return _nn(self.v_is_number(v) & _nn(frac_zero))
+            return _nn((vt == "BIGINT") | (self.v_is_number(v) & _nn(frac_zero)))
         raise ExprUnsupported(f"unknown type {t!r}")
 
     def v_is_string(self, v: Column) -> Column:
-        return _nn(self._vt(v) == "STRING")
+        return self.v_type_is(v, "string")
 
     def v_is_number(self, v: Column) -> Column:
-        vt = self._vt(v)
-        return _nn((vt == "BIGINT") | (vt == "DOUBLE") | (vt == "FLOAT") | vt.startswith("DECIMAL"))
+        return self.v_type_is(v, "number")
 
     def v_is_bool(self, v: Column) -> Column:
-        return _nn(self._vt(v) == "BOOLEAN")
+        return self.v_type_is(v, "boolean")
 
     def v_is_null(self, v: Column) -> Column:
         return _nn(F.is_variant_null(v))
 
     def v_as_string(self, v: Column) -> Column:
-        return F.try_variant_get(v, "$", "string")
+        return self._memo(v, "string", lambda: F.try_variant_get(v, "$", "string"),
+                          when="string")
 
     def v_as_number(self, v: Column) -> Column:
         # Reference number model (Jackson, jsonvalue.double_canonical):
@@ -890,15 +1019,18 @@ class VariantCompiler(_BaseCompiler):
         # scale 0, e.g. "4611686018427387905.0", is indistinguishable
         # from a big-int token by variant type and stays exact — a
         # documented residual beyond double's 2^53 integer range.)
-        vt = self._vt(v)
-        dec = F.try_variant_get(v, "$", DEC)
-        canon = F.try_variant_get(v, "$", "double").try_cast(DEC)
-        float_tok = _nn((vt == "DOUBLE") | (vt == "FLOAT")
-                        | (vt.startswith("DECIMAL") & ~vt.endswith(",0)")))
-        return F.when(float_tok, canon).otherwise(dec)
+        def build() -> Column:
+            vt = self._vt(v)
+            float_tok = _nn((vt == "DOUBLE") | (vt == "FLOAT")
+                            | (vt.startswith("DECIMAL") & ~vt.endswith(",0)")))
+            return F.when(float_tok, self.v_as_number_dbl(v).try_cast(DEC)) \
+                    .otherwise(F.try_variant_get(v, "$", DEC))
+
+        return self._memo(v, "number", build, when="number")
 
     def v_as_number_dbl(self, v: Column) -> Column:
-        return F.try_variant_get(v, "$", "double")
+        return self._memo(v, "double", lambda: F.try_variant_get(v, "$", "double"),
+                          when="number")
 
     def _num_render(self, v: Column) -> Column:
         """Jackson toString of a NUMBER variant. Int-family lexemes
@@ -916,7 +1048,7 @@ class VariantCompiler(_BaseCompiler):
         return F.when(
             _nn(int_fam),
             F.try_variant_get(v, "$", "decimal(38,0)").cast("string"),
-        ).otherwise(F.try_variant_get(v, "$", "double").cast("string"))
+        ).otherwise(self.v_as_number_dbl(v).cast("string"))
 
     def v_render(self, v: Column) -> Column:
         """Jackson ``JsonNode.toString()`` — exact for every scalar.
@@ -933,28 +1065,39 @@ class VariantCompiler(_BaseCompiler):
         string for containers (ContainerNode.asText() == "")."""
         vt = self._vt(v)
         return (
-            F.when(vt == "STRING", F.try_variant_get(v, "$", "string"))
+            F.when(vt == "STRING", self.v_as_string(v))
             .when(vt.startswith("OBJECT") | vt.startswith("ARRAY"), F.lit(""))
             .when(self.v_is_number(v), self._num_render(v))
             .otherwise(F.to_json(v))  # BOOLEAN → true/false, VOID → null
         )
 
     def v_as_bool(self, v: Column) -> Column:
-        return F.try_variant_get(v, "$", "boolean")
+        return self._memo(v, "boolean", lambda: F.try_variant_get(v, "$", "boolean"),
+                          when="boolean")
 
     def _child(self, v: Column, name: str) -> Column:
         if not _SAFE_KEY.match(name):
             raise ExprUnsupported(f"property name {name!r} not JSONPath-safe")
-        return F.try_variant_get(v, f"$.{name}", "variant")
+        return self._memo(v, ("child", name),
+                          lambda: F.try_variant_get(v, f"$.{name}", "variant"))
+
+    def _item(self, v: Column, i: int) -> Column:
+        """Element ``i`` (0-based) of array value ``v``; NULL when absent."""
+        return self._memo(v, ("item", i),
+                          lambda: F.try_element_at(self._as_array(v), F.lit(i + 1)))
 
     def v_has_prop(self, v: Column, name: str) -> Column:
         return _nn(self.v_type_is(v, "object") & self._child(v, name).isNotNull())
 
     def _as_map(self, v: Column) -> Column:
-        return F.try_variant_get(v, "$", "map<string,variant>")
+        return self._memo(v, "map",
+                          lambda: F.try_variant_get(v, "$", "map<string,variant>"),
+                          when="object")
 
     def _as_array(self, v: Column) -> Column:
-        return F.try_variant_get(v, "$", "array<variant>")
+        return self._memo(v, "array",
+                          lambda: F.try_variant_get(v, "$", "array<variant>"),
+                          when="array")
 
     def _object_keywords(self, node: dict, v: Column, path: tuple) -> list[Check]:
         checks: list[Check] = []
@@ -1173,7 +1316,7 @@ class VariantCompiler(_BaseCompiler):
             # kernel parity (_kw_items*): per-index subschema errors
             # surface at path/i with their OWN keywords — no synthetic
             # per-item wrapper
-            el = F.try_element_at(arr, F.lit(i + 1))
+            el = self._item(v, i)
             has = _nn(is_arr & (F.size(arr) > i))
             sub_checks = self.compile(sub, el, path + (i,))
             for c in sub_checks:
@@ -1278,7 +1421,10 @@ class VariantCompiler(_BaseCompiler):
                 return F.when(self.v_is_number(x), num).otherwise(
                     F.concat(vt, F.lit("|"), F.to_json(x)))
 
-            canon = F.transform(arr, _canon_el)
+            # the whole transform is total and reads only ``arr``, so it
+            # is a slot too; its lambda body stays inside it
+            canon = self._memo(v, "canon",
+                               lambda: F.transform(self._as_array(v), _canon_el))
             # UniqueItemsCompiler.java:46: arg = the FIRST duplicate
             # item's instance JsonPointer (kernel: path + (i,))
             first_dup = F.array_min(F.filter(

@@ -26,6 +26,7 @@ from ..core.validator import (CompileConfig, CompiledSchema,
 from .compiler import (
     Check,
     ExprUnsupported,
+    SlotSink,
     TypedRowCompiler,
     VariantCompiler,
     ok_of,
@@ -183,19 +184,26 @@ class SparkValidator:
         return self.config.content_mode in (content_mod.ENCODING,
                                             content_mod.ENCODING_AND_SCHEMA)
 
-    def _expr_checks_json(self, doc: Column) -> tuple[Column, list[Check]]:
+    def _variant_checks(self, doc: Column,
+                        slots: Optional[SlotSink] = None) -> list[Check]:
+        """The checks of a JSON-string ``doc`` column, parse check first.
+        With ``slots`` the parsed document and every extraction from it
+        are slot columns (see :class:`SlotSink`); without, inline."""
         comp = VariantCompiler(
             self.registry,
             dialect=self.dialect,
             format_assertions=self.config.format_assertions,
             content_asserts=self._content_asserts(),
             regex_factory=self.regex_factory,
+            slots=slots,
         )
         v = F.try_parse_json(doc)
+        if slots is not None:
+            v = slots.root(v)
         checks = comp.compile(self.schema, v, ())
         # unparseable document = invalid instance (Schema.apply parses first)
         parse_fail = Check(doc.isNotNull() & v.isNull(), "", "$parse", "not parseable JSON")
-        return v, [parse_fail] + checks
+        return [parse_fail] + checks
 
     def json_columns(self, doc: Column) -> tuple[Column, Column]:
         """(valid, violations) Columns for a JSON-string doc column.
@@ -206,7 +214,7 @@ class SparkValidator:
             raise ExprUnsupported("engine forced to udf")
         if self.config.treat_as_array:
             raise ExprUnsupported("treat_as_array needs the UDF kernel")
-        _, checks = self._expr_checks_json(doc)
+        checks = self._variant_checks(doc)
         return ok_of(checks), violations_array(checks)
 
     def _udf_result(self) -> "F.pandas_udf":
@@ -262,40 +270,34 @@ class SparkValidator:
                    with_violations: bool = True) -> DataFrame:
         """Adds ``valid: boolean`` (and ``violations``) columns.
 
-        Expression path parses the document ONCE into an intermediate
-        variant column (separate projection). Building every check on
-        the raw ``try_parse_json(doc)`` expression would inline a
-        re-parse at each of the ~2×keywords occurrences — conditional
-        (CASE WHEN) contexts defeat codegen subexpression elimination,
-        so for large documents that multiplies the dominant parse cost.
+        The expression path evaluates no per-row extraction twice. The
+        parse and every extraction from the parsed document (property
+        navigation, type tags, typed casts) are named slot columns, added
+        by one ``withColumns`` projection per nesting depth; one more
+        projection computes each check's ``fail`` bit, which ``valid``
+        and ``violations`` then share. The slots are dropped after the
+        ``valid``/``violations`` projection. Inline,
+        each check would re-derive its own copies: whole-stage codegen
+        does not reach the validation projection (its higher-order
+        functions are ``CodegenFallback``) and subexpression elimination
+        does not reach into ``CASE WHEN``/``coalesce`` branches. Two
+        invariants hold (see :class:`VariantCompiler`): nothing built
+        from a higher-order lambda variable is hoisted, and only total
+        expressions are, since a slot runs on every row. Slot names
+        avoid every column of ``df``.
         """
         doc = F.col(doc_col)
         if self.engine in ("auto", "expr") and not self.config.treat_as_array:
             try:
-                comp = VariantCompiler(
-                    self.registry,
-                    dialect=self.dialect,
-                    format_assertions=self.config.format_assertions,
-                    content_asserts=self._content_asserts(),
-                    regex_factory=self.regex_factory,
-                )
-                tmp = "__jss_variant"
-                checks = comp.compile(self.schema, F.col(tmp), ())
-                parse_fail = Check(doc.isNotNull() & F.col(tmp).isNull(),
-                                   "", "$parse", "not parseable JSON")
-                checks = [parse_fail] + checks
-                out = df.withColumn(tmp, F.try_parse_json(doc))
+                slots = SlotSink(df.columns)
+                checks = slots.hoist_fails(self._variant_checks(doc, slots))
                 # NULL doc → NULL verdict (matches the UDF kernel path)
-                out = out.withColumn(
-                    "valid",
-                    F.when(doc.isNull(), F.lit(None).cast("boolean")).otherwise(ok_of(checks)),
-                )
+                out = {"valid": F.when(doc.isNull(), F.lit(None).cast("boolean"))
+                                 .otherwise(ok_of(checks))}
                 if with_violations:
-                    out = out.withColumn(
-                        "violations",
-                        F.when(doc.isNull(), F.lit(None)).otherwise(violations_array(checks)),
-                    )
-                return out.drop(tmp)
+                    out["violations"] = F.when(doc.isNull(), F.lit(None)) \
+                                         .otherwise(violations_array(checks))
+                return slots.project(df).withColumns(out).drop(*slots.names)
             except ExprUnsupported:
                 if self.engine == "expr":
                     raise

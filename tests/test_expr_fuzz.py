@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import json
 import random
+from functools import reduce
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from json_schema_spark.plans.compiler import ExprUnsupported
 from json_schema_spark.plans.runner import SparkValidator
@@ -22,6 +23,7 @@ from tests import differential_gen as G
 
 N_SCHEMAS = 100
 N_INSTANCES = 30
+HOISTED_STRIDE = 4
 
 
 @pytest.mark.parametrize("dialect", ["draft7", "2019-09", "2020-12"])
@@ -49,11 +51,24 @@ def test_expr_path_fuzz(spark, dialect):
 
     assert expressible >= N_SCHEMAS * 0.6  # the fast path carries most schemas
 
+    # the hoisted plan (apply_json's slot projections) rides along on
+    # every HOISTED_STRIDE-th schema, one union branch each (building a
+    # second plan per schema doubles the driver-side cost)
+    one = df.coalesce(1)
+    hoisted = reduce(DataFrame.unionAll, [
+        v.apply_json(one, "doc", with_violations=False)
+         .select("i", F.lit(k).alias("k"), "valid")
+        for k, v in enumerate(validators) if k % HOISTED_STRIDE == 0])
+    av = {(r["k"], r["i"]): r["valid"] for r in hoisted.collect()}
+
     out = df.select("i", *cols).orderBy("i").collect()
     for row in out:
         i = row["i"]
         for k, v in enumerate(validators):
             got = row[f"v{k}"]
+            assert av.get((k, i), got) is got, (
+                f"dialect={dialect} schema#{k} instance#{i} "
+                f"apply_json={av[k, i]} json_columns={got}")
             want = v.kernel.is_valid_json(docs[i])
             assert got is want, (
                 f"dialect={dialect} schema#{k} instance#{i}\n"

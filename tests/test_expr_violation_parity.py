@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import json
 import random
+from functools import reduce
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from json_schema_spark.core.validator import (CompileConfig, compile_schema)
 from json_schema_spark.plans.compiler import ExprUnsupported
@@ -87,9 +88,11 @@ def _is_negzero_divergence(doc_text: str, path: str, e_msg: str,
             and math.copysign(1.0, inst) < 0)
 
 
-def _compare(spark, cases, dialect):
+def _compare(spark, cases, dialect, hoisted_stride=1):
     """cases: list of (schema, [doc_text, ...]). Batched into ONE Spark
-    job: per-schema valid + violations columns over a shared doc DF."""
+    job: per-schema valid + violations columns over a shared doc DF.
+    Every ``hoisted_stride``-th schema also goes through ``apply_json``
+    (a second job), whose result must equal ``json_columns``'."""
     prepared = []
     for schema, docs in cases:
         try:
@@ -111,11 +114,21 @@ def _compare(spark, cases, dialect):
         cols.append(vc.alias(f"v{k}"))
         cols.append(ec.alias(f"e{k}"))
     rows = {r["i"]: r for r in df.select("i", *cols).collect()}
+    one = df.coalesce(1)
+    hoisted = reduce(DataFrame.unionAll, [
+        SparkValidator(schema, dialect=dialect).apply_json(one, "doc")
+        .select("i", F.lit(k).alias("k"), "valid", "violations")
+        for k, (schema, *_) in enumerate(prepared) if k % hoisted_stride == 0])
+    applied = {(r["k"], r["i"]): (r["valid"], r["violations"])
+               for r in hoisted.collect()}
 
     checked = mismatches = 0
     for k, (schema, docs, _, _, kern) in enumerate(prepared):
         for d in docs:
             r = rows[idx[d]]
+            inline = (r[f"v{k}"], r[f"e{k}"])
+            assert applied.get((k, idx[d]), inline) == inline, (
+                f"apply_json != json_columns {json.dumps(schema)} on {d}")
             k_ok, k_errs = kern.validate_json(d)
             e_ok = r[f"v{k}"]
             assert e_ok is k_ok, (
@@ -225,6 +238,26 @@ TARGETED_D7 = [
     ({"items": False}, ["[1,2]", "[]"]),
     ({"items": {"properties": {"a": {"minimum": 1}}, "required": ["a"]}},
      ['[{"a":0},{}]', '[{"a":2}]']),
+    # lambda scope: higher-order applicators under a property, so each
+    # lambda body reads a slot column of the hoisted plan
+    ({"properties": {"a": {"items": {"properties": {
+        "b": {"type": "integer", "minimum": 2}}, "required": ["b"]}}}},
+     ['{"a":[{"b":1},{},{"b":3}]}', '{"a":[{"b":"x"}]}', '{"a":{}}']),
+    ({"properties": {"o": {"patternProperties": {"^x": {"minimum": 3}}}}},
+     ['{"o":{"x1":1,"x2":5,"y":0}}', '{"o":[]}']),
+    ({"properties": {"o": {"properties": {"k": {"type": "string"}},
+                           "additionalProperties": {"type": "integer",
+                                                    "maximum": 5}}}},
+     ['{"o":{"k":1,"z":9,"w":"s"}}', '{"o":{"k":"s","z":1}}']),
+    ({"properties": {"o": {"propertyNames": {"maxLength": 2}}}},
+     ['{"o":{"abc":1,"a":2}}', '{"o":1}']),
+    ({"properties": {"t": {"contains": {"properties": {"n": {"minimum": 5}},
+                                        "required": ["n"]}}}},
+     ['{"t":[{"n":1},{"m":7}]}', '{"t":[{"n":6}]}', '{"t":[]}']),
+    ({"properties": {"t": {"uniqueItems": True,
+                           "items": {"type": ["integer", "array"]}}}},
+     ['{"t":[1,[1],1.0,[1]]}', '{"t":[2,2]}', '{"t":[3,"x"]}']),
+    ({"items": {"items": {"minimum": 1}}}, ["[[0,2],[3,-1]]", "[[1]]"]),
 ]
 
 TARGETED_2020 = [
@@ -247,6 +280,10 @@ TARGETED_2020 = [
      ['["a",1,5]', '["a",1]']),
     ({"prefixItems": [{"type": "string"}], "unevaluatedItems": False},
      ['["a",1]', '["a"]']),
+    ({"properties": {"a": {"prefixItems": [{"type": "string"}],
+                           "unevaluatedItems": {"type": "integer",
+                                                "minimum": 0}}}},
+     ['{"a":["x",1,-2,"y"]}', '{"a":[1]}', '{"a":["x"]}']),
     ({"prefixItems": [{"type": "integer"}], "items": {"minimum": 2}},
      ['["x",1,3]', "[1,5]"]),
     # regression (fresh-seed sweep): a FALSE subschema inside a
@@ -316,5 +353,5 @@ def test_fuzz_violation_parity(spark, dialect, seed):
         docs.append(json.dumps(t))
         docs.append(json.dumps(G.mutate(rng, t, n_edits=1)))
         cases.append((schema, docs))
-    checked = _compare(spark, cases, dialect)
+    checked = _compare(spark, cases, dialect, hoisted_stride=4)
     assert checked >= 20, f"only {checked} failing docs exercised"

@@ -229,3 +229,67 @@ def test_prepare_training_v2_no_extra_corpus_shuffle(spark):
     n_exchange = plan.count("Exchange hashpartitioning")
     assert n_exchange <= 5, f"{n_exchange} exchanges:\n{plan[:4000]}"
     assert "BroadcastHashJoin" in plan  # decontamination joins broadcast
+
+
+# six properties shaped like the JSON workload's documents: strings with
+# pattern/maxLength/enum, a bounded integer, an array with items and
+# uniqueItems
+_DOC_SCHEMA = {
+    "type": "object",
+    "required": ["repo", "path", "commit", "lang", "tokens", "tags"],
+    "properties": {
+        "repo": {"type": "string", "pattern": "^org[0-9]+/repo[0-9]+$"},
+        "path": {"type": "string", "maxLength": 512},
+        "commit": {"type": "string", "pattern": "^[0-9a-f]{40}$"},
+        "lang": {"enum": ["python", "java", "sql"]},
+        "tokens": {"type": "integer", "minimum": 16, "maximum": 120},
+        "tags": {"type": "array", "items": {"type": "string"},
+                 "uniqueItems": True},
+    },
+}
+
+
+def _call_args(plan: str, call: str) -> list[str]:
+    """The argument text of every ``call(...)`` in ``plan``."""
+    out, i = [], plan.find(call)
+    while i >= 0:
+        start = i + len(call)
+        depth = 1
+        j = start
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        out.append(plan[start:j - 1])
+        i = plan.find(call, start)
+    return out
+
+
+def test_apply_json_extracts_each_variant_path_once(spark):
+    """The hoisted plan navigates each property once and type-tags each
+    row-level value once; every check reads the slot columns. Inline,
+    ``$.tokens`` alone was navigated 183 times."""
+    df = spark.createDataFrame([(1, '{"tokens": 3}')], "id long, doc string")
+    out = SparkValidator(_DOC_SCHEMA).apply_json(df, "doc")
+    key = "spark.sql.debug.maxToStringFields"  # no "... more fields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    for name in _DOC_SCHEMA["properties"]:
+        assert plan.count(f"$.{name},") == 1, name
+    # type tags of row-level values; those of lambda-variable values
+    # (array elements) stay inline by design (lambda scope)
+    tags = [a for a in _call_args(plan, "schemaOfVariant(") if "lambda " not in a]
+    assert len(tags) <= len(_DOC_SCHEMA["properties"]) + 1, tags
+
+
+def test_apply_json_keeps_caller_columns_named_like_temps(spark):
+    df = spark.createDataFrame(
+        [(1, '{"tokens": 200}', "mine", 7)],
+        "id long, doc string, __jss_variant string, __JSS_S1 int")
+    out = SparkValidator(_DOC_SCHEMA).apply_json(df, "doc")
+    assert out.columns == df.columns + ["valid", "violations"]
+    r = out.collect()[0]
+    assert (r["__jss_variant"], r["__JSS_S1"], r["valid"]) == ("mine", 7, False)

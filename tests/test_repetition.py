@@ -110,6 +110,23 @@ def test_filter_drops_repetitive_keeps_clean(spark):
         df, keep_signals=True).columns
 
 
+def test_features_replace_existing_signal_columns(docs):
+    # a keep_signals=True output fed back in: each signal stays one
+    # column with the recomputed value, and a caller column named like
+    # the temp struct survives untouched
+    fed = gopher_repetition_filter(
+        docs, thresholds=dict.fromkeys(GOPHER_THRESHOLDS, 1.0), keep_signals=True)
+    fed = fed.withColumn("__jss_rep_sig", F.col("doc_id") * 10)
+    out = repetition_features(fed)
+    assert len(out.columns) == len(set(out.columns))
+    assert set(out.columns) == set(fed.columns)
+    for r in out.collect():
+        assert r["__jss_rep_sig"] == r["doc_id"] * 10
+        exp = _py_signals(CASES[r["doc_id"]])
+        for name, v in exp.items():
+            assert r[name] == pytest.approx(v, abs=1e-12), (r["doc_id"], name)
+
+
 def test_filter_threshold_subset(spark):
     df = spark.createDataFrame([(1, "x\nx\nx\nx\ny z w v u t s")],
                                "doc_id int, text string")
