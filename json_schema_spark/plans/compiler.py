@@ -214,7 +214,8 @@ class SlotSink:
         self._keys: dict[int, tuple] = {}  # id(ref) -> key
         self._reads: list[Column] = []  # every ref handed out, in order
 
-    def _fresh(self, stem: str) -> str:
+    def fresh(self, stem: str) -> str:
+        """A new column name from ``stem``, absent from every name taken."""
         name, n = stem, 0
         while name.lower() in self._taken:
             n += 1
@@ -231,7 +232,7 @@ class SlotSink:
 
     def root(self, expr: Column) -> Column:
         """The document slot (depth 1) every other slot derives from."""
-        return self._add(("root",), self._fresh("__jss_variant"), expr, 1)
+        return self._add(("root",), self.fresh("__jss_variant"), expr, 1)
 
     def key_of(self, col: Column) -> Optional[tuple]:
         """The slot key of ``col``, or None when it is not a slot ref."""
@@ -250,14 +251,14 @@ class SlotSink:
         expr = build()
         depth = 1 + max(self._slots[self.key_of(c)][2]
                         for c in (parent, *self._reads[mark:]))
-        return self._add(key, self._fresh(f"__jss_s{len(self._slots)}"), expr, depth)
+        return self._add(key, self.fresh(f"__jss_s{len(self._slots)}"), expr, depth)
 
     def hoist_fails(self, checks: list[Check]) -> list[Check]:
         """``checks`` with each ``fail`` bit a slot, one projection past
         the deepest extraction: ``ok_of`` and ``violations_array`` then
         read one computed bit instead of each evaluating the check."""
         depth = 1 + max(s[2] for s in self._slots.values())
-        return [replace(c, fail=self._add(("fail", i), self._fresh(f"__jss_f{i}"),
+        return [replace(c, fail=self._add(("fail", i), self.fresh(f"__jss_f{i}"),
                                           c.fail, depth))
                 for i, c in enumerate(checks)]
 

@@ -6,19 +6,27 @@ Arrow-batched pandas-UDF kernel for schemas the expression compiler
 cannot express — the Spark analogue of the reference's single
 ``Schema.apply`` entry point (``Schema.java:30-86``), with laziness
 supplied by the DataFrame plan instead of a cold reactive pipeline.
+That choice is made in one place (:meth:`SparkValidator._apply`, with
+:meth:`SparkValidator._expr_gate`) for ``json_columns``, ``apply_json``
+and ``apply_table``.
 
-The UDF fallback ships (schema-JSON, registry-docs-JSON, config) to
-executors and compiles the Python kernel **once per worker** via a
-module-level cache — compile-once / apply-many across Arrow batches.
+The UDF fallback ships one kernel spec to executors: the validator's
+own (schema, registry docs, :class:`CompileConfig`), cloudpickled once
+and keyed by its sha256. Each worker compiles the Python kernel from it
+**once** via a module-level cache — compile-once / apply-many across
+Arrow batches.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
-from typing import Any, Iterable, Optional
+from dataclasses import replace
+from typing import Any, Callable, Iterable, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark import cloudpickle
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..core.registry import SchemaRegistry
 from ..core.validator import (CompileConfig, CompiledSchema,
@@ -38,32 +46,23 @@ __all__ = ["SparkValidator", "VIOLATION_SCHEMA"]
 VIOLATION_SCHEMA = "array<struct<path:string,keyword:string,message:string>>"
 _RESULT_SCHEMA = f"struct<valid:boolean,violations:{VIOLATION_SCHEMA}>"
 
-# executor-side kernel cache: one compile per (schema, config) per worker
-_KERNEL_CACHE: dict[tuple, CompiledSchema] = {}
+# try_parse_json rejects a duplicate key unless this is on; the kernel
+# keeps the last one, as Jackson does
+_DUPLICATE_KEYS = "spark.sql.variant.allowDuplicateKeys"
+
+# executor-side kernel cache: one compile per (spec sha256, collect) per worker
+_KERNEL_CACHE: dict[tuple[str, bool], CompiledSchema] = {}
 
 
-def _executor_kernel(key: tuple, schema_json: str, docs_json: str, dialect: str,
-                     fmt: bool, content_mode: str, collect: bool,
-                     custom_formats: Optional[dict] = None,
-                     treat_as_array: bool = False,
-                     regex_factory=None,
-                     content_encodings: Optional[dict] = None,
-                     content_media_types: Optional[dict] = None) -> CompiledSchema:
-    k = _KERNEL_CACHE.get(key)
+def _executor_kernel(key: str, spec: bytes, collect: bool) -> CompiledSchema:
+    k = _KERNEL_CACHE.get((key, collect))
     if k is None:
-        reg = SchemaRegistry(default_dialect=dialect)
-        for uri, doc in json.loads(docs_json).items():
-            if not uri.startswith("urn:json-schema-spark:anon:"):
-                reg.add(doc, uri)
-        cfg = CompileConfig(dialect=dialect, format_assertions=fmt,
-                            content_mode=content_mode, collect_errors=collect,
-                            custom_formats=custom_formats or {},
-                            treat_as_array=treat_as_array,
-                            regex_factory=regex_factory,
-                            content_encodings=content_encodings or {},
-                            content_media_types=content_media_types or {})
-        k = compile_schema(json.loads(schema_json), registry=reg, config=cfg)
-        _KERNEL_CACHE[key] = k
+        schema, docs, config = cloudpickle.loads(spec)
+        reg = SchemaRegistry(default_dialect=config.dialect)
+        for uri, doc in docs.items():
+            reg.add(doc, uri)
+        k = _KERNEL_CACHE[(key, collect)] = compile_schema(
+            schema, registry=reg, config=replace(config, collect_errors=collect))
     return k
 
 
@@ -95,7 +94,7 @@ class SparkValidator:
         self.schema = schema
         self.engine = engine
         # custom format predicates / regex dialect / content codecs ride
-        # to executors inside the UDF closure (Spark pickles them) —
+        # to executors inside the kernel spec (cloudpickled) —
         # mirrors SchemaBuilder.java:306-323 (formats),
         # SchemaBuilder.setRegexFactory (RegexFactory.java:19-22) and
         # SimpleContentValidationRegistry (CHANGES 1.2.0)
@@ -142,33 +141,15 @@ class SparkValidator:
                 self._kernel_error = e
             else:
                 raise
-        self._docs_json = json.dumps(
-            {u: d for u, d in self.registry.docs.items()}, default=float
-        )
-        self._schema_json = json.dumps(schema, default=float)
-        # cache-key component distinguishing custom hook sets (formats,
-        # regex dialect, content codecs) in the long-lived executor
-        # kernel cache. Keyed by CONTENT (pickled bytes), not instance
-        # identity: id() can be reused after GC (stale-entry hazard) and
-        # needlessly defeats cache sharing between identical validators.
-        if (self.custom_formats or self.regex_factory is not None
-                or self.content_encodings or self.content_media_types):
-            import hashlib
-
-            from pyspark import cloudpickle
-
-            def _h(fn):
-                return hashlib.sha256(cloudpickle.dumps(fn)).hexdigest()
-
-            self._formats_key = (
-                tuple((n, _h(f)) for n, f in sorted(self.custom_formats.items())),
-                _h(self.regex_factory) if self.regex_factory is not None else None,
-                tuple((n, _h(f)) for n, f in sorted(self.content_encodings.items())),
-                tuple((n, _h(f)) for n, f in sorted(self.content_media_types.items())),
-            )
-        else:
-            self._formats_key = ()
-
+        # the executor kernel's spec, taken after the driver compile so
+        # remote $refs it loaded ride along (anonymous docs are re-added
+        # by compile_schema). Keyed by CONTENT, not instance identity:
+        # id() can be reused after GC (stale-entry hazard), and identical
+        # validators then share one executor kernel.
+        docs = {u: d for u, d in self.registry.docs.items()
+                if not u.startswith("urn:json-schema-spark:anon:")}
+        self._spec = cloudpickle.dumps((schema, docs, self.config))
+        self._spec_key = hashlib.sha256(self._spec).hexdigest()
 
     @property
     def kernel(self):
@@ -210,61 +191,9 @@ class SparkValidator:
 
         Raises ExprUnsupported when the schema needs the UDF kernel.
         """
-        if self.engine == "udf":
-            raise ExprUnsupported("engine forced to udf")
-        if self.config.treat_as_array:
-            raise ExprUnsupported("treat_as_array needs the UDF kernel")
+        self._expr_gate(SparkSession.active())
         checks = self._variant_checks(doc)
         return ok_of(checks), violations_array(checks)
-
-    def _udf_result(self) -> "F.pandas_udf":
-        self.kernel  # fail fast driver-side (Java-only regex schemas)
-        key = (self._schema_json, self._docs_json, self.dialect,
-               self.config.format_assertions, self.config.content_mode, True,
-               self._formats_key, self.config.treat_as_array)
-        schema_json, docs_json, dialect = self._schema_json, self._docs_json, self.dialect
-        fmt, cmode = self.config.format_assertions, self.config.content_mode
-        customs, taa = self.custom_formats, self.config.treat_as_array
-        rfac, cenc, cmt = self.regex_factory, self.content_encodings, self.content_media_types
-
-        @F.pandas_udf(_RESULT_SCHEMA)
-        def validate_batch(docs: pd.Series) -> pd.DataFrame:
-            kernel = _executor_kernel(key, schema_json, docs_json, dialect, fmt, cmode, True,
-                                      customs, taa, rfac, cenc, cmt)
-            valids, viols = [], []
-            for doc in docs:
-                if doc is None:
-                    valids.append(None)
-                    viols.append(None)
-                    continue
-                ok, errs = kernel.validate_json(doc)
-                valids.append(ok)
-                viols.append([
-                    {"path": p, "keyword": kw, "message": m} for p, kw, m in errs
-                ])
-            return pd.DataFrame({"valid": valids, "violations": viols})
-
-        return validate_batch
-
-    def udf_valid(self) -> "F.pandas_udf":
-        """Boolean-only vectorized verdict UDF (fast mode — no error
-        materialization, mirrors the kernel's non-collecting path)."""
-        key = (self._schema_json, self._docs_json, self.dialect,
-               self.config.format_assertions, self.config.content_mode, False,
-               self._formats_key, self.config.treat_as_array)
-        schema_json, docs_json, dialect = self._schema_json, self._docs_json, self.dialect
-        fmt, cmode = self.config.format_assertions, self.config.content_mode
-        customs, taa = self.custom_formats, self.config.treat_as_array
-        rfac, cenc, cmt = self.regex_factory, self.content_encodings, self.content_media_types
-
-        @F.pandas_udf("boolean")
-        def valid_batch(docs: pd.Series) -> pd.Series:
-            kernel = _executor_kernel(key, schema_json, docs_json, dialect, fmt, cmode, False,
-                                      customs, taa, rfac, cenc, cmt)
-            f = kernel.is_valid_json
-            return docs.map(lambda d: None if d is None else f(d))
-
-        return valid_batch
 
     def apply_json(self, df: DataFrame, doc_col: str = "doc",
                    with_violations: bool = True) -> DataFrame:
@@ -287,27 +216,9 @@ class SparkValidator:
         avoid every column of ``df``.
         """
         doc = F.col(doc_col)
-        if self.engine in ("auto", "expr") and not self.config.treat_as_array:
-            try:
-                slots = SlotSink(df.columns)
-                checks = slots.hoist_fails(self._variant_checks(doc, slots))
-                # NULL doc → NULL verdict (matches the UDF kernel path)
-                out = {"valid": F.when(doc.isNull(), F.lit(None).cast("boolean"))
-                                 .otherwise(ok_of(checks))}
-                if with_violations:
-                    out["violations"] = F.when(doc.isNull(), F.lit(None)) \
-                                         .otherwise(violations_array(checks))
-                return slots.project(df).withColumns(out).drop(*slots.names)
-            except ExprUnsupported:
-                if self.engine == "expr":
-                    raise
-        if with_violations:
-            res = self._udf_result()(doc)
-            return (df.withColumn("_res", res)
-                      .withColumn("valid", F.col("_res.valid"))
-                      .withColumn("violations", F.col("_res.violations"))
-                      .drop("_res"))
-        return df.withColumn("valid", self.udf_valid()(doc))
+        return self._apply(
+            df, doc, lambda slots: slots.hoist_fails(self._variant_checks(doc, slots)),
+            with_violations, variant=True)
 
     # ----------------------------------------------------- typed mode
 
@@ -336,25 +247,86 @@ class SparkValidator:
         generator drops NULL fields by default, which is exactly the
         typed-mode NULL = absent convention. ``engine='expr'`` raises
         instead of falling back."""
-        if self.engine in ("auto", "expr"):
-            try:
-                checks = self.table_checks(df, columns)
-                out = df.withColumn("valid", ok_of(checks))
-                if with_violations:
-                    out = out.withColumn("violations", violations_array(checks))
-                return out
-            except ExprUnsupported:
-                if self.engine == "expr":
-                    raise
         names = list(columns) if columns is not None else df.columns
         doc = F.to_json(F.struct(*[F.col(n) for n in names]))
+        return self._apply(df, doc, lambda _: self.table_checks(df, names),
+                           with_violations, variant=False)
+
+    # ---------------------------------------------------- engine choice
+
+    def _expr_gate(self, variant_session: Optional[SparkSession]) -> None:
+        """Raises ExprUnsupported when no schema could take the
+        expression path: the engine is forced to ``udf``,
+        ``treat_as_array`` is on (the kernel's alone), or — for a
+        variant path run in ``variant_session`` — ``try_parse_json``
+        would reject duplicate keys the kernel accepts."""
+        if self.engine == "udf":
+            raise ExprUnsupported("engine forced to udf")
+        if self.config.treat_as_array:
+            raise ExprUnsupported("treat_as_array needs the UDF kernel")
+        if (variant_session is not None
+                and variant_session.conf.get(_DUPLICATE_KEYS, "false").lower() != "true"):
+            raise ExprUnsupported(f"{_DUPLICATE_KEYS} is off: try_parse_json "
+                                  "would reject documents with duplicate keys")
+
+    def _apply(self, df: DataFrame, doc: Column,
+               checks_of: Callable[[SlotSink], list[Check]],
+               with_violations: bool, variant: bool) -> DataFrame:
+        """``df`` plus ``valid`` (and ``violations``): the expression
+        path's ``checks_of(slots)`` where it applies, else one kernel UDF
+        call per row over the JSON-string ``doc``. ``engine='expr'``
+        raises instead of falling back. On the variant path a NULL
+        ``doc`` gets a NULL verdict, as the kernel gives it."""
+        slots = SlotSink(df.columns)
+        try:
+            self._expr_gate(df.sparkSession if variant else None)
+            checks = checks_of(slots)
+        except ExprUnsupported:
+            if self.engine == "expr":
+                raise
+            res = self._kernel_udf(with_violations)(doc)
+            if not with_violations:
+                return df.withColumn("valid", res)
+            tmp = slots.fresh("__jss_res")
+            return (df.withColumn(tmp, res)
+                      .withColumns({"valid": F.col(f"{tmp}.valid"),
+                                    "violations": F.col(f"{tmp}.violations")})
+                      .drop(tmp))
+        out = {"valid": ok_of(checks)}
         if with_violations:
-            res = self._udf_result()(doc)
-            return (df.withColumn("_res", res)
-                      .withColumn("valid", F.col("_res.valid"))
-                      .withColumn("violations", F.col("_res.violations"))
-                      .drop("_res"))
-        return df.withColumn("valid", self.udf_valid()(doc))
+            out["violations"] = violations_array(checks)
+        if variant:
+            out = {c: F.when(doc.isNull(), F.lit(None)).otherwise(e) for c, e in out.items()}
+        return slots.project(df).withColumns(out).drop(*slots.names)
+
+    def _kernel_udf(self, collect: bool):
+        """The kernel as a pandas UDF over JSON-string docs: the
+        ``valid``/``violations`` struct, or with ``collect=False`` the
+        verdict alone (no error is collected). NULL doc → NULL."""
+        self.kernel  # fail fast driver-side (Java-only regex schemas)
+        key, spec = self._spec_key, self._spec
+
+        # either hint makes a scalar pandas UDF; the result shape is the
+        # one the return type names
+        def batch(docs: pd.Series) -> pd.DataFrame:
+            kernel = _executor_kernel(key, spec, collect)
+            if not collect:
+                f = kernel.is_valid_json
+                return docs.map(lambda d: None if d is None else f(d))
+            valids, viols = [], []
+            for doc in docs:
+                if doc is None:
+                    valids.append(None)
+                    viols.append(None)
+                    continue
+                ok, errs = kernel.validate_json(doc)
+                valids.append(ok)
+                viols.append([
+                    {"path": p, "keyword": kw, "message": m} for p, kw, m in errs
+                ])
+            return pd.DataFrame({"valid": valids, "violations": viols})
+
+        return F.pandas_udf(batch, _RESULT_SCHEMA if collect else "boolean")
 
     # ------------------------------------------------------- results
 

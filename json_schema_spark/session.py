@@ -12,7 +12,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "default_driver_memory"]
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 40% of
+    physical memory, whole GiB, at least 1g and at most 24g. 24g is
+    where 16+ local threads stop losing CPU to GC (BASELINE.md round 2,
+    run 3); a larger share of a small host lets the JVM outgrow it."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, int(physical_bytes * 0.4) >> 30))}g"
 
 
 def get_spark(app: str = "json_schema_spark", cores: int | None = None,
@@ -40,21 +50,19 @@ def get_spark(app: str = "json_schema_spark", cores: int | None = None,
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.ui.enabled", str(ui).lower())
-        # 24g: at 16+ local threads an 8g heap inflates CPU work ~1.3-1.7×
-        # in GC/allocator contention; 24g measured ZERO inflation
-        # (BASELINE.md round 2, run 3). On a cluster spark-submit sizes
-        # executors instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        # Start G1 concurrent marking early (default IHOP 45% of 24g):
-        # mixed query sequences otherwise accumulate ~10g of old-gen
-        # garbage, and the first allocation-heavy stage after that hits
-        # a concurrent-mark/mixed-GC storm mid-stage (measured: the
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
+        # Start G1 concurrent marking early (default IHOP 45%): mixed
+        # query sequences otherwise accumulate ~10g of old-gen garbage
+        # in a 24g heap, and the first allocation-heavy stage after that
+        # hits a concurrent-mark/mixed-GC storm mid-stage (measured: the
         # MinHash verify stage at 3-6x its clean time, 650s of GC pause
         # across 32 tasks). IHOP=30 keeps marking ahead of the burst.
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                               "-XX:InitiatingHeapOccupancyPercent=30"
-                               " -XX:G1ReservePercent=15"))
+                "-XX:InitiatingHeapOccupancyPercent=30 -XX:G1ReservePercent=15")
+        # try_parse_json keeps the last of duplicate keys, as the kernel
+        # does; off, it rejects the document (apply_json then falls back)
+        .config("spark.sql.variant.allowDuplicateKeys", "true")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -41,3 +41,19 @@ def test_spark_validator_treat_as_array(spark):
     )
     out = v.apply_json(df, "doc", with_violations=False).orderBy("i")
     assert [r["valid"] for r in out.collect()] == [True, True, False]
+
+
+def test_apply_table_treat_as_array_matches_kernel(spark):
+    """The typed path honors treat_as_array too: under ``auto`` a scalar
+    where the schema wants an array is wrapped, as on the kernel."""
+    schema = {"properties": {"t": {"type": "array", "items": {"type": "string"}}}}
+    auto = SparkValidator(schema, treat_as_array=True)
+    udf = SparkValidator(schema, treat_as_array=True, engine="udf")
+    for rows, ddl in ([("x",), (None,)], "t string"), ([(5,)], "t int"):
+        df = spark.createDataFrame(rows, ddl)
+        got = [(r["valid"], [tuple(v) for v in r["violations"]])
+               for r in auto.apply_table(df).collect()]
+        assert got == [(r["valid"], [tuple(v) for v in r["violations"]])
+                       for r in udf.apply_table(df).collect()]
+        assert got == [auto.kernel.validate_json(json.dumps(
+            {} if r[0] is None else {"t": r[0]})) for r in rows]
