@@ -47,27 +47,7 @@ HEADLINE = [
     "snapshot_diff_orders",
     "incremental_validate_documents",
     "incremental_changelog_documents",
-    "minhash_neardup_documents",
-    "ngram_jaccard_documents",
-    "simhash_documents",
-    "ann_topk_embeddings",
-    "ivf_topk_embeddings",
-    "text_stats_documents",
-    "repetition_stats_documents",
-    "decontaminate_documents",
     "agg_pricing_summary",
-    # Arrow-batched mapInPandas multimodal kernels (fake-decode mode,
-    # DuckDB-oracle-paired): the measured Python-path baseline.
-    "image_features_documents",
-    "audio_features_documents",
-    "video_features_documents",
-    # round-3 session-2 pipeline operators: the three no-shuffle
-    # codegen projections and the composed corpus-assembly pipeline
-    "pii_scrub_documents",
-    "chunk_chars_documents",
-    "sample_split_documents",
-    "prepare_training_data",
-    "prepare_training_data_v2",
 ]
 
 
@@ -108,17 +88,8 @@ def main() -> None:
     t_flag = time.perf_counter() - t0
     times["flagship_validation"] = round(t_flag, 3)
 
-    # bench-only perf variants (not driver queries): the xxhash64
-    # MinHash fast path (the headline query is the sha-universal
-    # oracle-gated twin since round 4 — same plan shape, pricier hash)
-    # and the skew-salted flagship over a Zipf-skewed repo distribution.
-    from json_schema_spark.operators.dedup import minhash_lsh_pairs
-
-    def _xx_minhash(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_lsh_pairs(docs, shingle_n=5, num_hashes=64, bands=16,
-                                 threshold=0.7, hash_fn="xxhash64")
-
+    # bench-only perf variant (not a driver query): the skew-salted
+    # flagship over a Zipf-skewed repo distribution.
     def _salted_flagship(spark, sf_dir):
         # skew-mitigated layout: repartition(N, repo, salt) over the
         # Zipf-shaped repo distribution (the largest repo holds ~15% of
@@ -127,8 +98,7 @@ def main() -> None:
         return partition_ledger(validate_source_table(
             spark.read.parquet(src_path), salt_partitions=CPUS * 4))
 
-    EXTRAS = {"minhash_neardup_xx_documents": _xx_minhash,
-              "flagship_salted": _salted_flagship}
+    EXTRAS = {"flagship_salted": _salted_flagship}
 
     for name in HEADLINE:
         t0 = time.perf_counter()

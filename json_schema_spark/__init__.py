@@ -11,8 +11,8 @@ as an idiomatic Spark engine:
   pandas-UDF fallback;
 * :mod:`json_schema_spark.operators` — table-level checks (column
   stats, uniqueness, referential integrity, distribution drift,
-  per-partition ledger) and training-data ops (dedup, similarity
-  search, text analysis);
+  snapshot reconciliation, incremental re-validation, per-partition
+  ledger and resumable checkpointed runs);
 * :mod:`json_schema_spark.sources` — deterministic synthetic
   source-code-repository table generator and schema loaders;
 * :mod:`json_schema_spark.streaming` — Structured Streaming validation

@@ -147,9 +147,11 @@ def jackson_as_text(v: Any) -> str:
 
 def java_string_hash(s: str) -> int:
     """``String.hashCode()``: ``31*h + unit`` over UTF-16 code units,
-    32-bit wraparound (sign is irrelevant to the bucket spread)."""
+    32-bit wraparound (sign is irrelevant to the bucket spread). An
+    unpaired surrogate (legal in a JSON ``\\u`` escape) is one code
+    unit, as in a Java string."""
     h = 0
-    b = s.encode("utf-16-be")
+    b = s.encode("utf-16-be", "surrogatepass")
     for i in range(0, len(b), 2):
         h = (31 * h + (b[i] << 8 | b[i + 1])) & 0xFFFFFFFF
     return h

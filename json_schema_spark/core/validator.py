@@ -28,6 +28,7 @@ behaviour (georgeakulov/json-schema):
 
 from __future__ import annotations
 
+import decimal
 import json
 import re
 from dataclasses import dataclass, field
@@ -608,7 +609,19 @@ class _Compiler:
             if not is_number(inst):
                 return True
             try:
-                ok = (to_decimal(inst) % m) == 0
+                v = to_decimal(inst)
+                try:
+                    ok = v % m == 0
+                except decimal.InvalidOperation:
+                    if not v.is_finite():
+                        raise
+                    # DivisionImpossible: the integer quotient has more
+                    # digits than the 28-digit default context holds;
+                    # retry with a precision that covers it, exact like
+                    # the reference's BigDecimal.divideAndRemainder
+                    with decimal.localcontext() as ctx:
+                        ctx.prec = v.adjusted() - m.adjusted() + 2
+                        ok = v % m == 0
             except Exception:
                 ok = False
             if ok:

@@ -22,7 +22,20 @@ __all__ = [
     "uniqueness_report",
     "orphans",
     "referential_report",
+    "ensure_parallelism",
 ]
+
+
+def ensure_parallelism(df: DataFrame, min_parts: Optional[int] = None) -> DataFrame:
+    """Repartition ONLY if the plan has fewer partitions than the
+    session's parallelism — a local single-file parquet scan otherwise
+    pins per-row-heavy plans to one core. At cluster scale the input
+    already has ≥ parallelism partitions and this is a no-op (no
+    shuffle inserted)."""
+    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
 
 
 # ------------------------------------------------------------------ stats
@@ -44,7 +57,6 @@ def column_stats(df: DataFrame, cols: Optional[Iterable[str]] = None,
     """
     names = list(cols) if cols is not None else df.columns
     if exact_distinct:
-        from .dedup import ensure_parallelism
         df = ensure_parallelism(df.select(*names))
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in names:

@@ -38,15 +38,55 @@ Scale shape
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from functools import reduce
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import _persist_swap
 from .reconcile import snapshot_diff
 
 __all__ = ["incremental_validate", "apply_changelog"]
+
+# Bounded per-call-site cache of persisted delta-key frames: the persist
+# is what stops the semi- and anti-join from recomputing the diff join,
+# but a long-lived session (bench best-of-N loops, notebooks) would
+# otherwise accumulate one orphaned cache per invocation until LRU
+# eviction starts thrashing. Keeping a few slots per call site (not
+# one) means interleaved invocations of the SAME operator over
+# different inputs no longer evict each other's cache before it is
+# consumed; only the oldest plan past the slot bound is unpersisted. A
+# lock makes the bookkeeping safe under concurrent driver threads
+# (Spark jobs themselves are thread-safe).
+_PERSIST_SLOTS = 4
+_PERSIST_LOCK = threading.Lock()
+_LAST_PERSISTED: dict[str, OrderedDict[int, DataFrame]] = {}
+
+
+def _persist_swap(key: str, df: DataFrame) -> DataFrame:
+    with _PERSIST_LOCK:
+        slot = _LAST_PERSISTED.setdefault(key, OrderedDict())
+        for h, prev in list(slot.items()):
+            try:
+                if prev.sameSemantics(df):
+                    # identical plan (warm re-run of the same query):
+                    # reuse the entry — the CacheManager would dedupe
+                    # the persist anyway, and unpersisting first would
+                    # throw away the warm hit for zero memory benefit
+                    slot.move_to_end(h)
+                    return prev
+            except Exception:
+                pass
+        out = df.persist()
+        slot[id(out)] = out
+        while len(slot) > _PERSIST_SLOTS:
+            _, old = slot.popitem(last=False)
+            try:
+                old.unpersist(False)
+            except Exception:
+                pass
+        return out
 
 
 def _key_cond(left, right, keys: Sequence[str]):

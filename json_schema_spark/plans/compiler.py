@@ -1687,7 +1687,9 @@ class VariantCompiler(_BaseCompiler):
         """Python ``repr()`` of a string key — the kernel's wrapper
         messages interpolate ``{k!r}``. Covers the printable subset
         (backslash, quote selection, \\n/\\r/\\t); other control-char
-        escapes are kernel-only exotica."""
+        escapes are kernel-only exotica, as is the ``'\\ud800'`` the
+        kernel renders for an unpaired surrogate (the variant already
+        holds that key as ``?``)."""
         esc = F.replace(k, F.lit("\\"), F.lit("\\\\"))
         for raw, rep in (("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t")):
             esc = F.replace(esc, F.lit(raw), F.lit(rep))

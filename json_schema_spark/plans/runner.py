@@ -66,6 +66,13 @@ def _executor_kernel(key: str, spec: bytes, collect: bool) -> CompiledSchema:
     return k
 
 
+def _utf8(s: str) -> str:
+    """``s`` with each unpaired surrogate (legal in a JSON ``\\u``
+    escape) replaced by ``?``, as the JVM's UTF-8 encoder does; Arrow
+    cannot carry the surrogate itself."""
+    return s.encode("utf-8", "replace").decode("utf-8")
+
+
 class SparkValidator:
     """Compile once on the driver; apply to any number of DataFrames.
 
@@ -322,7 +329,8 @@ class SparkValidator:
                 ok, errs = kernel.validate_json(doc)
                 valids.append(ok)
                 viols.append([
-                    {"path": p, "keyword": kw, "message": m} for p, kw, m in errs
+                    {"path": _utf8(p), "keyword": kw, "message": _utf8(m)}
+                    for p, kw, m in errs
                 ])
             return pd.DataFrame({"valid": valids, "violations": viols})
 

@@ -40,13 +40,10 @@ def get_spark(app: str = "json_schema_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # InferFiltersFromGenerate copies the generator's INPUT expression
         # into a `size(e) > 0` filter that predicate-pushdown then sinks
-        # below the repartition exchange — for the dedup operators the
-        # input is a computed shingle/band array, so the whole shingling
-        # pipeline re-evaluates inside the (often single-task) scan
-        # stage. Measured on the prefix-Jaccard headline at sf0.1: two
-        # concurrent 5.3 s single-task filter stages ahead of every
-        # 32-way stage; the rule saves nothing here (no generator input
-        # is ever empty at the scan) and serializes the cold path.
+        # below the projection that computes it, so a computed generator
+        # input re-evaluates there: `violations_df` explodes the
+        # violations array, and with the rule on its optimized plan
+        # carries a second copy of that array's expression as a filter.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.ui.enabled", str(ui).lower())

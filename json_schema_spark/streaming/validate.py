@@ -69,7 +69,8 @@ def stream_dedup(stream_df: DataFrame, key_cols: Iterable[str], ts_col: str,
     ``dropDuplicatesWithinWatermark`` — duplicates arriving within the
     watermark horizon are dropped, state is evicted past it (bounded
     memory at any throughput; the streaming analogue of
-    ``dedup.exact_duplicates``)."""
+    ``checks.duplicate_keys``, which reports duplicates instead of
+    dropping them)."""
     return (
         stream_df.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(list(key_cols))

@@ -223,3 +223,48 @@ def test_no_python_in_expression_path_plan(spark, snaps):
     out = incremental_validate(old, new, ["k"], validate, prior)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "BatchEval" not in plan
+
+
+def test_persist_swap_is_bounded_not_leaked(spark):
+    """The per-call-site persist cache keeps the last ``_PERSIST_SLOTS``
+    plans (interleaved invocations over different inputs don't evict
+    each other before their joins consume them), reuses the entry of an
+    identical plan, and releases the oldest entry past that bound
+    instead of accumulating for the session's lifetime."""
+    from json_schema_spark.operators import incremental as I
+
+    key = "test_persist_swap_bound"
+
+    def cached_rdd_ids():
+        sc = spark.sparkContext
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    def frame(n):
+        # DIFFERENT plans → distinct cache entries (an identical plan
+        # would dedupe in the CacheManager and mask a leak)
+        return spark.range(n).select((F.col("id") * 3).alias("k"))
+
+    I._LAST_PERSISTED.pop(key, None)
+    before = cached_rdd_ids()
+    I._persist_swap(key, frame(100)).count()
+    first_ids = cached_rdd_ids() - before
+    assert first_ids, "_persist_swap should persist its frame"
+    # a second, different frame must NOT evict the first while within
+    # the slot bound
+    I._persist_swap(key, frame(120)).count()
+    assert first_ids <= cached_rdd_ids() - before, \
+        "earlier entry was evicted while within the slot bound"
+    # an identical plan reuses the existing entry
+    slot = I._LAST_PERSISTED[key]
+    n_entries = len(slot)
+    again = frame(120)
+    assert I._persist_swap(key, again) is not again
+    assert len(slot) == n_entries, "identical plan should reuse its slot entry"
+    # past the bound the OLDEST entry is released
+    for i in range(I._PERSIST_SLOTS):
+        I._persist_swap(key, frame(130 + i)).count()
+    assert not (first_ids & (cached_rdd_ids() - before)), \
+        "oldest cache entry was never released"
+    assert len(slot) == I._PERSIST_SLOTS
+    for df in I._LAST_PERSISTED.pop(key).values():
+        df.unpersist(False)

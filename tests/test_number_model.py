@@ -16,6 +16,10 @@ match the reference's compile error exactly.
 
 from __future__ import annotations
 
+import json
+import re
+from fractions import Fraction
+
 import pytest
 
 from json_schema_spark.core.jsonvalue import double_canonical, parse_json
@@ -27,7 +31,6 @@ from json_schema_spark.core.validator import (
 
 
 def _verdict(schema_json: str, doc_json: str, dialect: str = "2020-12") -> str:
-    import json
     try:
         k = compile_schema(json.loads(schema_json),
                            config=CompileConfig(dialect=dialect))
@@ -100,9 +103,101 @@ NONFINITE_VERDICTS = [
 ]
 
 
+# multipleOf whose integer quotient needs more than 28 digits: each
+# verdict checked against java.math.BigDecimal.divideAndRemainder (the
+# call MultipleOfCompiler.java:36-43 makes), not the compiled reference
+BIGDECIMAL_VERIFIED = [
+    ('{"multipleOf": 0.5}', "12345678901234567890123456789", "t"),
+    ('{"multipleOf": 3}', "1234567890123456789012345678901234567890", "t"),
+    ('{"multipleOf": 0.01}', "123456789012345678901234567.89", "t"),
+    ('{"multipleOf": 1e-30}', "1.5", "t"),
+]
+
+
 @pytest.mark.parametrize("schema,doc,want", REFERENCE_VERIFIED)
 def test_reference_verified_number_semantics(schema, doc, want):
     assert _verdict(schema, doc) == want
+
+
+@pytest.mark.parametrize("schema,doc,want", BIGDECIMAL_VERIFIED)
+def test_multiple_of_exact_past_default_precision(schema, doc, want):
+    assert _verdict(schema, doc) == want
+
+
+# Exact-rational differential for the kernel's numeric keywords. Each
+# lexeme becomes the value the reference computes on: an integer lexeme
+# is exact (BigInteger), a float lexeme is BigDecimal.valueOf(double)
+# (``double_canonical``, JVM-differential-tested on its own). The
+# verdict then follows from exact rational arithmetic, which is what
+# BigDecimal's unbounded remainder and compareTo give.
+WIDE_INSTANCES = [
+    "0", "-0.0", "1", "7", "1.5", "1.6", "-1.6", "0.7", "2.5e-29",
+    "1e-300", "5e-324", "12345678901234567890123456789",
+    "-12345678901234567890123456789",
+    "1234567890123456789012345678901234567890",
+    "1234567890123456789012345678901234567891",
+    "123456789012345678901234567890123000000000",
+    "123456789012345678901234567890123000000001",
+    "99999999999999999999999999999999999999999999999999",
+    "123456789012345678901234567.89", "4611686018427387904.0", "1e300",
+    "1e308", "100000000000000000000", "99999999999999999999",
+    "99999999999999999999.5",
+]
+
+MULTIPLE_OF_DIVISORS = [
+    # integers, up to a 33-digit BigInteger
+    "1", "3", "7", "9007199254740993", "18446744073709551616",
+    "123456789012345678901234567890123",
+    # short decimals and doubles with long expansions
+    "0.5", "0.01", "0.1", "0.3", "2.5", "0.7", "1.0000000000000002",
+    "0.000000000000000003", "1e-18", "1e-10",
+    # tiny: the quotient of a wide instance needs hundreds of digits
+    "1e-30", "3e-30", "1e-300", "2.2250738585072014e-308", "4.9e-324",
+    # large doubles, including 2^62 whose Java 17 rendering is not the
+    # shortest round-trip form
+    "1e20", "1e22", "4611686018427387904.0", "1e300",
+    "1.7976931348623157e308",
+]
+
+BOUNDS = [
+    "0", "1", "-1", "1.5", "0.1", "5e-324", "99999999999999999999", "1e20",
+    "12345678901234567890123456789", "-12345678901234567890123456789",
+    "1234567890123456789012345678901234567890", "1e300",
+]
+
+
+def _exact(lexeme: str) -> Fraction:
+    if re.fullmatch(r"-?[0-9]+", lexeme):
+        return Fraction(int(lexeme))
+    return Fraction(double_canonical(lexeme))
+
+
+@pytest.mark.parametrize("divisor", MULTIPLE_OF_DIVISORS)
+def test_multiple_of_matches_exact_rational(divisor):
+    """Whatever the digit span of instance over divisor, the kernel's
+    remainder is exact: its verdict equals ``instance / divisor`` being
+    an integer in rational arithmetic."""
+    m = _exact(divisor)
+    got = {i: _verdict('{"multipleOf": %s}' % divisor, i)
+           for i in WIDE_INSTANCES}
+    want = {i: "t" if (_exact(i) / m).denominator == 1 else "f"
+            for i in WIDE_INSTANCES}
+    assert got == want
+
+
+@pytest.mark.parametrize("bound", BOUNDS)
+def test_bounds_match_exact_rational(bound):
+    """minimum/maximum and their exclusive forms compare exactly at any
+    width, on both sides of a bound that is itself wide."""
+    b = _exact(bound)
+    ops = {"minimum": lambda v: v >= b, "maximum": lambda v: v <= b,
+           "exclusiveMinimum": lambda v: v > b,
+           "exclusiveMaximum": lambda v: v < b}
+    for kw, op in ops.items():
+        got = {i: _verdict(json.dumps({kw: None}).replace("null", bound), i)
+               for i in WIDE_INSTANCES}
+        want = {i: "t" if op(_exact(i)) else "f" for i in WIDE_INSTANCES}
+        assert got == want, kw
 
 
 @pytest.mark.parametrize("schema,doc,want", NONFINITE_VERDICTS)

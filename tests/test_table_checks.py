@@ -11,6 +11,7 @@ from json_schema_spark.operators.checks import (
     column_stats,
     duplicate_keys,
     duplicate_keys_salted,
+    ensure_parallelism,
     length_histogram,
     orphans,
     uniqueness_report,
@@ -72,6 +73,24 @@ def test_column_stats(spark, table):
     assert stats["lang"]["distinct_count"] == 9
     approx = {r["column"]: r for r in column_stats(table).collect()}
     assert abs(approx["lang"]["distinct_count"] - 9) <= 1
+
+
+def test_ensure_parallelism_fans_out_only_narrow_plans(spark):
+    """A plan with fewer partitions than asked for is repartitioned,
+    rows intact; one that already has enough is returned as is."""
+    narrow = spark.range(0, 100, numPartitions=1)
+    wide = ensure_parallelism(narrow, min_parts=4)
+    assert wide.rdd.getNumPartitions() == 4
+    assert sorted(r.id for r in wide.collect()) == list(range(100))
+    assert ensure_parallelism(wide, min_parts=4) is wide
+    parallel = spark.range(0, 100, numPartitions=6)
+    assert ensure_parallelism(parallel, min_parts=4) is parallel
+
+
+def test_ensure_parallelism_defaults_to_session_parallelism(spark):
+    target = spark.sparkContext.defaultParallelism
+    out = ensure_parallelism(spark.range(0, 10, numPartitions=1))
+    assert out.rdd.getNumPartitions() == target
 
 
 def test_uniqueness(spark, table):
