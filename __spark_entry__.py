@@ -128,7 +128,14 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the parallel layout: downstream filters evaluate above the cache,
     in parallel, and repeated bench passes skip the re-scan. At cluster scale inputs already arrive with
     >= parallelism splits and neither the repartition nor the cache
-    would exist (ensure_parallelism is a no-op there)."""
+    would exist (ensure_parallelism is a no-op there).
+
+    Entries of a stopped session are dropped on the next call: their
+    cached blocks died with that session's context, and the keys would
+    otherwise pin the dead session and its plans for the process's
+    lifetime."""
+    for stale in [k for k in _TP_CACHE if k[0].sparkContext._jsc is None]:
+        del _TP_CACHE[stale]
     key = (spark, sf_dir, name)
     df = _TP_CACHE.get(key)
     if df is None:

@@ -51,30 +51,39 @@ def partition_ledger(validated: DataFrame, key_col: str = "row_id",
     if not timed:
         pid = (F.col(part_col).cast("int") if part_col is not None
                else F.spark_partition_id())
+        # the per-row projection holds no higher-order function, so it
+        # stays in the scan's whole-stage-codegen stage: only invalid
+        # rows reach the aggregate, as (key, paths, keywords), and the
+        # ``key|path|keyword`` lines are built once per partition after it
+        n = F.coalesce(F.array_size("violations"), F.lit(0))
         slim = validated.select(
             pid.alias("partition_id"),
             F.coalesce(F.col("valid"), F.lit(False)).alias("v"),
-            F.coalesce(
-                F.transform(
-                    F.col("violations"),
-                    lambda x: F.concat_ws(
-                        "|", F.col(key_col).cast("string"), x["path"], x["keyword"]
-                    ),
-                ),
-                F.array().cast("array<string>"),
-            ).alias("lines"),
+            n.alias("n"),
+            F.when(n > 0, F.struct(
+                F.col(key_col).cast("string").alias("k"),
+                F.col("violations.path").alias("p"),
+                F.col("violations.keyword").alias("w"),
+            )).alias("r"),
         )
+        lines = F.flatten(F.transform(
+            F.col("rs"),
+            lambda r: F.transform(r["p"], lambda x, i: F.concat_ws(
+                "|", r["k"], x, F.element_at(r["w"], i + 1)))))
         return (
             slim.groupBy("partition_id")
             .agg(
                 F.count(F.lit(1)).alias("rows_scanned"),
                 F.sum(F.col("v").cast("long")).alias("valid_rows"),
                 F.sum((~F.col("v")).cast("long")).alias("violation_rows"),
-                F.sum(F.size("lines").cast("long")).alias("violations"),
-                F.lit(None).cast("double").alias("elapsed_ms"),
-                F.sha2(
-                    F.concat_ws("\n", F.sort_array(F.flatten(F.collect_list("lines")))), 256
-                ).alias("violations_sha256"),
+                F.sum(F.col("n").cast("long")).alias("violations"),
+                F.collect_list("r").alias("rs"),
+            )
+            .select(
+                "partition_id", "rows_scanned", "valid_rows", "violation_rows",
+                "violations", F.lit(None).cast("double").alias("elapsed_ms"),
+                F.sha2(F.concat_ws("\n", F.sort_array(lines)), 256)
+                .alias("violations_sha256"),
             )
         )
 

@@ -124,29 +124,40 @@ def _regate(c: Check, gate: Column) -> Check:
     return Check(_nn(gate & c.fail), c.path, c.keyword, c.message, ent)
 
 
+def _entry_if(fail: Column, path: Column, keyword: str,
+              message: "str | Column", empty: Column) -> Column:
+    """A one-element violations array when ``fail``, else ``empty``
+    (one shared ``_empty_viols()`` per array saves its py4j calls).
+    Built from ``when``/``array``/``struct`` only, so the projection
+    keeps whole-stage codegen (``filter(array(...))`` is a
+    CodegenFallback higher-order function)."""
+    msg = F.lit(message) if isinstance(message, str) else message
+    return F.when(fail, F.array(F.struct(
+        path.alias("path"), F.lit(keyword).alias("keyword"),
+        msg.alias("message")))).otherwise(empty)
+
+
+def _concat_viols(parts: list[Column], empty: Column) -> Column:
+    if not parts:
+        return empty
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
+
+
+def _names_if(named: list[tuple[str, Column]]) -> Column:
+    """Comma-joined names whose condition holds, in list order:
+    ``concat_ws`` skips the NULLs of the unfired ``when``s."""
+    return F.concat_ws(",", *[F.when(cond, F.lit(n)) for n, cond in named])
+
+
 def violations_array(checks: list[Check]) -> Column:
     """array<struct<path,keyword,message>> of fired checks (static
     entries first, then each check's runtime-addressed entries)."""
-    static = [
-        F.when(
-            c.fail,
-            F.struct(
-                F.lit(c.path).alias("path"),
-                F.lit(c.keyword).alias("keyword"),
-                (F.lit(c.message) if isinstance(c.message, str)
-                 else c.message).alias("message"),
-            ),
-        )
-        for c in checks if c.keyword is not None
-    ]
-    parts: list[Column] = []
-    if static:
-        parts.append(F.filter(F.array(*static), lambda x: x.isNotNull()))
-    parts.extend(F.coalesce(c.entries, _empty_viols())
+    empty = _empty_viols()
+    parts = [_entry_if(c.fail, F.lit(c.path), c.keyword, c.message, empty)
+             for c in checks if c.keyword is not None]
+    parts.extend(F.coalesce(c.entries, empty)
                  for c in checks if c.entries is not None)
-    if not parts:
-        return _empty_viols()
-    return parts[0] if len(parts) == 1 else F.concat(*parts)
+    return _concat_viols(parts, empty)
 
 
 _PLACEHOLDER = re.compile(r"\{(\d+)\}")
@@ -624,9 +635,7 @@ class _BaseCompiler:
                                     f"schema dependency on {k!r} failed"))
         if dreq_viol:
             any_viol = reduce(lambda a, b: a | b, [v for _, v in dreq_viol])
-            joined = F.array_join(F.filter(F.array(
-                *[F.when(v, F.lit(k)) for k, v in dreq_viol]),
-                lambda x: x.isNotNull()), ",")
+            joined = _names_if(dreq_viol)
             checks.append(Check(any_viol, p, "dependentRequired",
                                 msg_col("DEPENDENT_REQUIRED", joined)))
         if "dependentSchemas" in node and post7:
@@ -1118,9 +1127,7 @@ class VariantCompiler(_BaseCompiler):
             any_missing = reduce(lambda a, b: a | b, absent.values()) \
                 if req else F.lit(False)
             if req:
-                joined = F.array_join(F.filter(F.array(
-                    *[F.when(absent[n], F.lit(n)) for n in ordered]),
-                    lambda x: x.isNotNull()), ",")
+                joined = _names_if([(n, absent[n]) for n in ordered])
                 checks.append(Check(any_missing, p, "required",
                                     msg_col("REQUIRED", joined)))
         if "properties" in node:
@@ -1726,17 +1733,14 @@ class VariantCompiler(_BaseCompiler):
             return F.replace(m, F.lit(prefix), ptr)
 
         parts: list[Column] = []
-        static = []
+        empty = _empty_viols()
         for c in checks:
             if c.keyword is None:
                 continue
             suffix = c.path[plen:]
             pcol = F.concat(ptr, F.lit(suffix)) if suffix else ptr
-            static.append(F.when(c.fail, F.struct(
-                pcol.alias("path"), F.lit(c.keyword).alias("keyword"),
-                rebase_msg(c.message).alias("message"))))
-        if static:
-            parts.append(F.filter(F.array(*static), lambda x: x.isNotNull()))
+            parts.append(_entry_if(c.fail, pcol, c.keyword, rebase_msg(c.message),
+                                   empty))
         for c in checks:
             if c.entries is not None:
                 parts.append(F.transform(c.entries, lambda e: F.struct(
@@ -1745,11 +1749,7 @@ class VariantCompiler(_BaseCompiler):
                     e["keyword"].alias("keyword"),
                     F.replace(e["message"], F.lit(prefix), ptr)
                      .alias("message"))))
-        if not parts:
-            ent = _empty_viols()
-        else:
-            ent = parts[0] if len(parts) == 1 else F.concat(*parts)
-        return ok_of(checks), F.coalesce(ent, _empty_viols())
+        return ok_of(checks), F.coalesce(_concat_viols(parts, empty), empty)
 
     @staticmethod
     def _keyed_check(keys: Column, per_key) -> tuple[Column, Column]:
@@ -1982,9 +1982,7 @@ class TypedRowCompiler(_BaseCompiler):
                                 & ~self.v_present(self._field(val, name)))
                       for name in req}
             any_missing = reduce(lambda a, b: a | b, absent.values())
-            joined = F.array_join(F.filter(F.array(
-                *[F.when(absent[n], F.lit(n)) for n in java_hashset_order(req)]),
-                lambda x: x.isNotNull()), ",")
+            joined = _names_if([(n, absent[n]) for n in java_hashset_order(req)])
             checks.append(Check(any_missing, p, "required",
                                 msg_col("REQUIRED", joined)))
         if "properties" in node:

@@ -6,10 +6,13 @@ or a lost pushdown.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from json_schema_spark.flagship import FLAGSHIP_SCHEMA, validate_source_table
+from json_schema_spark.operators.ledger import partition_ledger
 from json_schema_spark.plans.runner import SparkValidator
 from json_schema_spark.sources.synth import source_code_table
 
@@ -28,6 +31,57 @@ def test_flagship_plan_python_free_no_shuffle(spark, src):
     plan = _plan(out)
     assert "Python" not in plan          # zero UDFs on the typed-row path
     assert "Exchange" not in plan        # pure projection over the scan
+
+
+_PROJECT = re.compile(r"^[ +\-:]*(\*\(\d+\) )?Project \[", re.M)
+
+
+def _run_plan(df) -> str:
+    """The plan ``df`` executed with, read after running it: under AQE
+    the plan read before execution shows no codegen stages."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _interpreted_projects(plan: str) -> list[str]:
+    found = list(_PROJECT.finditer(plan))
+    assert found, plan
+    return [m.group(0) for m in found if m.group(1) is None]
+
+
+@pytest.fixture(scope="module")
+def scanned(spark, src, tmp_path_factory):
+    """``src`` read back from parquet: the generator's own projection
+    is not codegen'd, a file scan is."""
+    p = str(tmp_path_factory.mktemp("codegen") / "src")
+    src.write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def test_flagship_validation_is_whole_stage_codegen(spark, scanned):
+    """A CodegenFallback expression (a higher-order function such as
+    ``filter``/``transform``) in the violations array would drop the
+    validation Project out of whole-stage codegen."""
+    v = SparkValidator(FLAGSHIP_SCHEMA, dialect="draft7")
+    out = v.apply_table(scanned, columns=["repo", "path", "commit", "lang", "content"],
+                        with_violations=True)
+    assert _interpreted_projects(_run_plan(out)) == []
+
+
+@pytest.mark.parametrize("observed", [False, True])
+def test_flagship_ledger_rows_are_whole_stage_codegen(spark, scanned, observed):
+    """The north-rule job, with and without an ``observe`` between
+    validation and ledger (without one, Catalyst may collapse the two
+    projections into one): every Project below the ledger's Exchange is
+    codegen'd, so neither the violations array nor the ledger's per-row
+    projection holds a CodegenFallback expression."""
+    validated = validate_source_table(scanned)
+    if observed:
+        validated = validated.observe("rows", F.count(F.lit(1)).alias("n"))
+    plan = _run_plan(partition_ledger(validated))
+    below = plan[plan.index("Exchange"):]
+    assert _interpreted_projects(below) == []
 
 
 def test_flagship_column_pruning_reaches_scan(spark, src, tmp_path):

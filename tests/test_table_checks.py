@@ -192,6 +192,102 @@ def test_ledger_timed_part_col_misaligned(spark, table):
             assert fast[pid][field] == timed[pid][field], (pid, field)
 
 
+def test_flagship_outputs_pinned(spark, tmp_path):
+    """Byte-identity pin of the flagship's ``(row_id, valid,
+    violations)`` and of its untimed ledger over one partition: a
+    rewrite of how the violations array or the ledger lines are built
+    must not move a byte."""
+    p = str(tmp_path / "src")
+    source_code_table(spark, 20000, seed=3, partitions=4).write.parquet(p)
+    df = spark.read.parquet(p)
+    rows = F.to_json(F.struct("row_id", "valid", "violations"))
+    digest = validate_source_table(df).agg(F.sha2(F.concat_ws(
+        "\n", F.sort_array(F.collect_list(rows))), 256)).first()[0]
+    assert digest == "33c19f759f47a7b9ca46efa14f97e475848ac70f4ed3d4d9ec26a9a3c7c12fbe"
+    [led] = partition_ledger(validate_source_table(df.coalesce(1))).collect()
+    assert led.asDict() == {
+        "partition_id": 0, "rows_scanned": 20000, "valid_rows": 19861,
+        "violation_rows": 139, "violations": 142, "elapsed_ms": None,
+        "violations_sha256":
+            "51d7347f985d150a427929b5a2f3bd32cbb4ed6f0fab44d6654bbdebb57f70bf",
+    }
+
+
+_LEDGER_EDGE_ROWS = [
+    # (row_id, bucket, valid, violations)
+    (1, 0, True, None),
+    (2, 0, True, []),
+    (3, 0, False, [("/a", None, "m1"), (None, "type", "m2")]),
+    (4, 0, False, [("/b", "enum", "m3")]),
+    (5, 0, None, [("", "required", "m4")]),
+    (6, 1, True, None),
+    (7, 1, True, []),
+]
+
+
+def _python_ledger(rows, part) -> dict:
+    """The documented ledger, in plain Python: per partition, sorted
+    ``row_key|path|keyword`` lines (NULL parts skipped) under sha256."""
+    out: dict = {}
+    for rid, bucket, valid, viols in rows:
+        st = out.setdefault(part(bucket), {
+            "rows_scanned": 0, "valid_rows": 0, "violation_rows": 0,
+            "violations": 0, "lines": []})
+        st["rows_scanned"] += 1
+        st["valid_rows" if valid else "violation_rows"] += 1
+        for path, kw, _ in viols or []:
+            st["violations"] += 1
+            st["lines"].append("|".join(
+                x for x in (str(rid), path, kw) if x is not None))
+    for st in out.values():
+        st["violations_sha256"] = hashlib.sha256(
+            "\n".join(sorted(st.pop("lines"))).encode()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("part_col", [None, "bucket"])
+def test_ledger_edge_cases_match_timed_and_python(spark, part_col):
+    """NULL and empty ``violations``, NULL ``path``/``keyword``
+    elements, a NULL verdict and (by bucket) a partition of valid rows
+    only: the untimed ledger equals the timed one and a plain-Python
+    digest of the documented lines, field by field."""
+    v = spark.createDataFrame(
+        _LEDGER_EDGE_ROWS,
+        "row_id long, bucket int, valid boolean, violations "
+        "array<struct<path:string,keyword:string,message:string>>",
+    ).coalesce(1)
+    fast = {r["partition_id"]: r.asDict() for r in
+            partition_ledger(v, part_col=part_col).collect()}
+    timed = {r["partition_id"]: r.asDict() for r in
+             partition_ledger(v, part_col=part_col, timed=True).collect()}
+    want = _python_ledger(_LEDGER_EDGE_ROWS,
+                          (lambda b: b) if part_col else (lambda b: 0))
+    assert fast.keys() == timed.keys() == want.keys()
+    for pid, exp in want.items():
+        for field, value in exp.items():
+            assert fast[pid][field] == timed[pid][field] == value, (pid, field)
+        assert fast[pid]["elapsed_ms"] is None
+
+
+def test_tp_cache_drops_stopped_sessions(spark, tmp_path, monkeypatch):
+    """A stopped session's memoized tables are evicted on the next
+    ``_tp`` call instead of pinning that session forever."""
+    import __spark_entry__ as E
+
+    class _Stopped:
+        sparkContext = type("SC", (), {"_jsc": None})()
+
+    stale = (_Stopped(), "/gone", "documents")
+    monkeypatch.setattr(E, "_TP_CACHE", {stale: object()})
+    spark.range(10).write.parquet(str(tmp_path / "documents.parquet"))
+    df = E._tp(spark, str(tmp_path), "documents")
+    try:
+        assert list(E._TP_CACHE) == [(spark, str(tmp_path), "documents")]
+        assert E._tp(spark, str(tmp_path), "documents") is df
+    finally:
+        df.unpersist()
+
+
 def test_checkpoint_crash_rerun_no_duplicates(spark, tmp_path):
     """ADVICE r02: a crash between the bucket data write and the
     manifest append must not leave duplicate rows after the rerun — the
