@@ -40,6 +40,7 @@ Catalyst taking the role of its runtime (SURVEY.md §4.1).
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, replace
 from decimal import Decimal
@@ -99,6 +100,12 @@ class Check:
     # tails / unevaluated*. Emitted alongside (or instead of) the
     # static entry; `fail` still governs the verdict alone.
     entries: "Optional[Column]" = None
+    # False for a check that only adds error entries: whenever it fires,
+    # a verdict check of the same list fires too (a branch's own errors
+    # under anyOf's, then/else's or a schema dependency's wrapper check).
+    # ``ok_of`` skips it, so nested combinators do not copy every inner
+    # check into each enclosing verdict.
+    verdict: bool = True
 
 
 def _nn(cond: Column) -> Column:
@@ -110,10 +117,32 @@ def _empty_viols() -> Column:
     return F.array().cast(_VIOL_TYPE)
 
 
+def _any(conds) -> Column:
+    """``c0 | c1 | …`` as a balanced tree. It evaluates and
+    short-circuits left to right like the left-deep chain, but the
+    optimizer pushes a negation of it (``ok_of``, ``~any_ok``) to the
+    leaves one tree level per pass: a left-deep chain of n checks costs
+    n passes of every rule over the whole plan, a balanced one log2(n)."""
+    return _balanced(operator.or_, list(conds))
+
+
+def _all(conds) -> Column:
+    """``c0 & c1 & …`` as a balanced tree (see ``_any``)."""
+    return _balanced(operator.and_, list(conds))
+
+
+def _balanced(op, cols: list[Column]) -> Column:
+    while len(cols) > 1:
+        cols = [op(cols[i], cols[i + 1]) if i + 1 < len(cols) else cols[i]
+                for i in range(0, len(cols), 2)]
+    return cols[0]
+
+
 def ok_of(checks: list[Check]) -> Column:
-    if not checks:
+    fails = [c.fail for c in checks if c.verdict]
+    if not fails:
         return F.lit(True)
-    return ~reduce(lambda a, b: a | b, [c.fail for c in checks])
+    return ~_any(fails)
 
 
 def _regate(c: Check, gate: Column) -> Check:
@@ -121,7 +150,13 @@ def _regate(c: Check, gate: Column) -> Check:
     ent = None
     if c.entries is not None:
         ent = F.when(_nn(gate), c.entries).otherwise(_empty_viols())
-    return Check(_nn(gate & c.fail), c.path, c.keyword, c.message, ent)
+    return replace(c, fail=_nn(gate & c.fail), entries=ent)
+
+
+def _implied(c: Check, gate: Column) -> Check:
+    """``c`` re-gated on ``gate``, for a list whose wrapper check fires
+    whenever ``gate & c.fail`` does: an entries-only check."""
+    return replace(_regate(c, gate), verdict=False)
 
 
 def _entry_if(fail: Column, path: Column, keyword: str,
@@ -474,7 +509,7 @@ class _BaseCompiler:
 
         if "type" in node:
             types = [node["type"]] if isinstance(node["type"], str) else list(node["type"])
-            m = reduce(lambda a, b: a | b, [self.v_type_is(val, t) for t in types])
+            m = _any(self.v_type_is(val, t) for t in types)
             # TypeCompiler.java:61-66: args = (instance.asText(), the
             # raw type keyword node)
             checks.append(Check(_nn(self.v_present(val) & ~m), p, "type",
@@ -549,11 +584,11 @@ class _BaseCompiler:
         if "anyOf" in node:
             branches = [self.compile(s, val, path) for s in node["anyOf"]]
             oks = [ok_of(cs) for cs in branches]
-            fail_all = _nn(self.v_present(val) & ~reduce(lambda a, b: a | b, oks))
+            fail_all = _nn(self.v_present(val) & ~_any(oks))
             # kernel/reference: when every branch fails, each failing
             # branch's OWN errors surface, then the ANY_OF error
             # (AnyOfCompiler — all_errs extended before the summary)
-            any_checks = [_regate(c, fail_all) for cs in branches for c in cs]
+            any_checks = [_implied(c, fail_all) for cs in branches for c in cs]
             any_checks.append(
                 Check(fail_all, p, "anyOf", render_message("ANY_OF")))
             # absorbed by an unevaluated* sibling: skipped for
@@ -586,10 +621,10 @@ class _BaseCompiler:
             # kernel parity (_kw_if_then_else): the taken arm's own
             # errors surface, then a synthetic then/else marker; the
             # 'if' subschema's errors are always discarded
-            ite_checks = [_regate(c, pres & cond) for c in then_checks]
+            ite_checks = [_implied(c, pres & cond) for c in then_checks]
             ite_checks.append(Check(_nn(pres & cond & ~then_ok), p, "then",
                                     "'then' schema failed"))
-            ite_checks.extend(_regate(c, pres & ~cond) for c in else_checks)
+            ite_checks.extend(_implied(c, pres & ~cond) for c in else_checks)
             ite_checks.append(Check(_nn(pres & ~cond & ~else_ok), p, "else",
                                     "'else' schema failed"))
             # absorbed by an unevaluated* sibling (skip on wrong type)
@@ -616,7 +651,7 @@ class _BaseCompiler:
             trigger = self.v_has_prop(val, k)
             if isinstance(d, list):
                 need = [self.v_has_prop(val, n) for n in d]
-                ok = reduce(lambda a, b: a & b, need) if need else F.lit(True)
+                ok = _all(need) if need else F.lit(True)
                 violated = _nn(trigger & ~ok)
                 if src_kw == "dependentRequired":
                     dreq_viol.append((k, violated))
@@ -630,11 +665,11 @@ class _BaseCompiler:
                 kw = "dependentSchemas" if src_kw == "dependentRequired" else src_kw
                 sub_checks = self.compile(d, val, path)
                 sub_ok = ok_of(sub_checks)
-                checks.extend(_regate(c, trigger) for c in sub_checks)
+                checks.extend(_implied(c, trigger) for c in sub_checks)
                 checks.append(Check(_nn(trigger & ~sub_ok), p, kw,
                                     f"schema dependency on {k!r} failed"))
         if dreq_viol:
-            any_viol = reduce(lambda a, b: a | b, [v for _, v in dreq_viol])
+            any_viol = _any(v for _, v in dreq_viol)
             joined = _names_if(dreq_viol)
             checks.append(Check(any_viol, p, "dependentRequired",
                                 msg_col("DEPENDENT_REQUIRED", joined)))
@@ -644,7 +679,7 @@ class _BaseCompiler:
                 trigger = self.v_has_prop(val, k)
                 sub_checks = self.compile(d, val, path)
                 sub_ok = ok_of(sub_checks)
-                ds_checks.extend(_regate(c, trigger) for c in sub_checks)
+                ds_checks.extend(_implied(c, trigger) for c in sub_checks)
                 ds_checks.append(Check(_nn(trigger & ~sub_ok), p, "dependentSchemas",
                                        f"schema dependency on {k!r} failed"))
             # absorbed by an unevaluated* sibling (skip on wrong type);
@@ -902,7 +937,7 @@ class _BaseCompiler:
                              & self._num_check(val, lambda n, _m=self._dec_lit(m, kw): n == _m))
             else:
                 raise ExprUnsupported(f"{kw} with composite member needs the UDF kernel")
-        any_ok = reduce(lambda a, b: a | b, [_nn(c) for c in conds])
+        any_ok = _any(_nn(c) for c in conds)
         # EnumCompiler.java:57 / ConstCompiler.java:37: args = (instance
         # node, the enum array node / const schema node)
         if kw == "const":
@@ -1124,7 +1159,7 @@ class VariantCompiler(_BaseCompiler):
             ordered = java_hashset_order(req)
             absent = {name: _nn(is_obj & self._child(v, name).isNull())
                       for name in req}
-            any_missing = reduce(lambda a, b: a | b, absent.values()) \
+            any_missing = _any(absent.values()) \
                 if req else F.lit(False)
             if req:
                 joined = _names_if([(n, absent[n]) for n in ordered])
@@ -1236,7 +1271,7 @@ class VariantCompiler(_BaseCompiler):
                         if crx.search(n):
                             succ.append(ok_of(self.compile(
                                 pats[rx], child, path + (n,))))
-                    succeeded = reduce(lambda a, b: a | b, succ)
+                    succeeded = _any(succ)
                     cp = self._ptr(path + (n,))
                     a_ok, a_ent = self._sub_entries(add, child, path,
                                                     F.lit(cp))
@@ -1981,7 +2016,7 @@ class TypedRowCompiler(_BaseCompiler):
             absent = {name: _nn(self.v_present(val)
                                 & ~self.v_present(self._field(val, name)))
                       for name in req}
-            any_missing = reduce(lambda a, b: a | b, absent.values())
+            any_missing = _any(absent.values())
             joined = _names_if([(n, absent[n]) for n in java_hashset_order(req)])
             checks.append(Check(any_missing, p, "required",
                                 msg_col("REQUIRED", joined)))

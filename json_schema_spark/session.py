@@ -60,6 +60,10 @@ def get_spark(app: str = "json_schema_spark", cores: int | None = None,
         # try_parse_json keeps the last of duplicate keys, as the kernel
         # does; off, it rejects the document (apply_json then falls back)
         .config("spark.sql.variant.allowDuplicateKeys", "true")
+        # DataFrame debugging records the Python call site of every
+        # Column call in the JVM: ten more py4j round trips per call
+        # (``F.col`` 3 → 13), about half the compiler's driver time
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
