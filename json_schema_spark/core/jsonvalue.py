@@ -78,12 +78,18 @@ def _java_decimal_cached(f: float) -> Decimal:
     return Decimal(java17_double_repr(f))
 
 
+# one decoder for every document: json.loads with keyword arguments
+# builds a new JSONDecoder per call
+_DECODER = json.JSONDecoder(parse_float=double_canonical,
+                            parse_constant=_reject_constant)
+
+
 def parse_json(text: str) -> Any:
     """Parse JSON with the reference's number model: integer literals
     exact (Jackson Int/Long/BigInteger ≙ Python int), float literals
-    double-canonical Decimals (see ``double_canonical``)."""
-    return json.loads(text, parse_float=double_canonical,
-                      parse_constant=_reject_constant)
+    double-canonical Decimals (see ``double_canonical``). A leading BOM
+    is a parse error."""
+    return _DECODER.decode(text)
 
 
 def is_number(v: Any) -> bool:

@@ -29,6 +29,7 @@ reference's own rendering quirks, all probe-verified:
 from __future__ import annotations
 
 import json
+import re
 from decimal import Decimal
 from typing import Any
 
@@ -78,6 +79,9 @@ MESSAGE_TEMPLATES: dict[str, str] = {
     "CONTENT_TYPE": "Not conform to content type {0}",
     "CONTENT_SCHEMA": "Not conform to content schema",
 }
+
+
+_PLACEHOLDER = re.compile(r"\{(\d+)\}")
 
 
 # ------------------------------------------------------------------
@@ -214,18 +218,16 @@ def render_message(kind: str, *args: Any) -> str:
     (MessageFormat semantics — the MAX_LENGTH ``{2}`` quirk). Args are
     pre-rendered strings except plain ints, which get NumberFormat
     grouping."""
-    import re as _re
-
     rendered = [
         java_int(a) if isinstance(a, int) and not isinstance(a, bool)
         else str(a)
         for a in args
     ]
 
-    def _sub(m: "_re.Match[str]") -> str:
+    def _sub(m: "re.Match[str]") -> str:
         i = int(m.group(1))
         return rendered[i] if i < len(rendered) else m.group(0)
 
     # substitution is template-driven (an arg containing "{0}" is not
     # re-substituted, matching MessageFormat)
-    return _re.sub(r"\{(\d+)\}", _sub, MESSAGE_TEMPLATES[kind])
+    return _PLACEHOLDER.sub(_sub, MESSAGE_TEMPLATES[kind])

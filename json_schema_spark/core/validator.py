@@ -201,9 +201,14 @@ class _Compiler:
         self.registry = registry
         self.config = config
         self._memo: dict[int, Callable] = {}
+        # set once any unevaluated* validator is built; read at call
+        # time, so a $ref/$dynamicRef target compiled later still turns
+        # annotation tracking on for every validator of this compiler
+        self._reads_ann = [False]
 
     # a validator is fn(inst, path, scope) -> (ok: bool,
-    #   errors: list[(path, keyword, msg)] | None, ann: list | None)
+    #   errors: list[(path, keyword, kind, args)] | None, ann: list | None)
+    # (errors as _err records them)
 
     def compile_node(self, node: Any) -> Callable:
         key = id(node)
@@ -243,7 +248,7 @@ class _Compiler:
             collect = self.config.collect_errors
 
             def always_fail(inst, path, scope):
-                errs = [(path, "false", render_message("FALSE_SCHEMA"))] if collect else None
+                errs = [(path, "false", "FALSE_SCHEMA", ())] if collect else None
                 return False, errs, None
 
             return always_fail
@@ -395,6 +400,8 @@ class _Compiler:
         # BasePropertiesCollectorValidator.java:27-41; reference-probe
         # verified for both drafts). unevaluatedItems transforms first,
         # so when both are present it owns the shared in-place keywords.
+        if ("unevaluatedItems" in node or "unevaluatedProperties" in node) and post7:
+            self._reads_ann[0] = True
         if "unevaluatedItems" in node and post7:
             moved = [fn for tag, fn in kws if tag in _UNEVAL_ITEMS_ABSORBS]
             kws = [(tag, fn) for tag, fn in kws if tag not in _UNEVAL_ITEMS_ABSORBS]
@@ -408,8 +415,11 @@ class _Compiler:
 
         collect = self.config.collect_errors
 
-        def schema_validator(inst, path, scope, _kws=tuple(fn for _, fn in kws)):
-            ann = _new_ann()
+        def schema_validator(inst, path, scope, _kws=tuple(fn for _, fn in kws),
+                             _reads_ann=self._reads_ann):
+            # annotations only feed unevaluated*; without a reader every
+            # keyword runs with ann=None, and anyOf may stop early
+            ann = _new_ann() if _reads_ann[0] else None
             errors = [] if collect else None
             ok = True
             for kv in _kws:
@@ -439,9 +449,13 @@ class _Compiler:
     def _sub(self, node: Any) -> Callable:
         return self.compile_node(node)
 
-    def _err(self, errors, path, kw, msg):
+    def _err(self, errors, path, kw, kind, *args):
+        """Record an error as its message kind (a ``MESSAGE_TEMPLATES``
+        key, or None for the literal text in ``args[0]``) and raw
+        arguments; ``CompiledSchema.validate`` renders the ones that
+        reach the output."""
         if errors is not None:
-            errors.append((path, kw, msg))
+            errors.append((path, kw, kind, args))
 
     # ------------------------------------------------------- references
 
@@ -455,8 +469,8 @@ class _Compiler:
                 _ann_merge(ann, sub_ann)
             elif errs:
                 errors.extend(errs) if errors is not None else None
-            elif errors is not None:
-                errors.append((path, "$ref", "referenced schema failed"))
+            else:
+                self._err(errors, path, "$ref", None, "referenced schema failed")
             return ok
 
         return kv
@@ -484,7 +498,7 @@ class _Compiler:
             elif errs and errors is not None:
                 errors.extend(errs)
             elif errors is not None:
-                errors.append((path, "$recursiveRef", "referenced schema failed"))
+                errors.append((path, "$recursiveRef", None, ("referenced schema failed",)))
             return ok
 
         return kv
@@ -511,7 +525,7 @@ class _Compiler:
             elif errs and errors is not None:
                 errors.extend(errs)
             elif errors is not None:
-                errors.append((path, "$dynamicRef", "referenced schema failed"))
+                errors.append((path, "$dynamicRef", None, ("referenced schema failed",)))
             return ok
 
         return kv
@@ -524,15 +538,20 @@ class _Compiler:
             if t not in ("null", "boolean", "string", "number", "integer", "array", "object"):
                 raise SchemaCompileError(f"unknown type {t!r}")
         # treat-as-array: "array" accepts any node (TypeCompiler.java:96-103)
-        taa = self.config.treat_as_array and "array" in types
+        if self.config.treat_as_array and "array" in types:
+            return lambda inst, path, scope, ann, errors: True
+        names = frozenset(types)
 
         def kv(inst, path, scope, ann, errors, _arg=arg):
-            if taa or any(type_matches(inst, t) for t in types):
+            name = _EXACT_TYPE_NAMES.get(type(inst))
+            if name is None:
+                if any(type_matches(inst, t) for t in types):
+                    return True
+            elif name in names:
                 return True
             # TypeCompiler.java:61-66: args = (instance.asText(), the
             # raw type keyword node)
-            self._err(errors, path, "type", render_message(
-                "TYPE", jackson_as_text(inst), jackson_to_string(_arg)))
+            self._err(errors, path, "type", "TYPE", inst, _arg)
             return False
 
         return kv
@@ -550,8 +569,7 @@ class _Compiler:
             except TypeError:
                 pass
             # EnumCompiler.java:57: args = (node, the enum array node)
-            self._err(errors, path, "enum", render_message(
-                "ENUM", jackson_to_string(inst), jackson_to_string(_values)))
+            self._err(errors, path, "enum", "ENUM", inst, _values)
             return False
 
         return kv
@@ -564,8 +582,7 @@ class _Compiler:
             if const_equal(inst, value):
                 return True
             # ConstCompiler.java:37: args = (node, schemaNode)
-            self._err(errors, path, "const", render_message(
-                "CONST", jackson_to_string(inst), jackson_to_string(value)))
+            self._err(errors, path, "const", "CONST", inst, value)
             return False
 
         return kv
@@ -594,8 +611,7 @@ class _Compiler:
                 return True
             # MaximumCompiler.java:33 etc: args = (instance node,
             # schema node)
-            self._err(errors, path, kw, render_message(
-                kind, jackson_to_string(inst), jackson_to_string(_arg)))
+            self._err(errors, path, kw, kind, inst, _arg)
             return False
 
         return kv
@@ -627,9 +643,7 @@ class _Compiler:
             if ok:
                 return True
             # MultipleOfCompiler.java:44: args = (node, schemaNode)
-            self._err(errors, path, "multipleOf", render_message(
-                "MULTIPLE_OF", jackson_to_string(inst),
-                jackson_to_string(arg)))
+            self._err(errors, path, "multipleOf", "MULTIPLE_OF", inst, arg)
             return False
 
         return kv
@@ -676,8 +690,7 @@ class _Compiler:
                 return True
             # PatternCompiler.java:44: args = (node.asText(), pattern) —
             # both raw strings, no JSON quoting
-            self._err(errors, path, "pattern",
-                      render_message("PATTERN", inst, pattern))
+            self._err(errors, path, "pattern", "PATTERN", inst, pattern)
             return False
 
         return kv
@@ -694,12 +707,10 @@ class _Compiler:
             # — two args against three placeholders, so {2} stays
             # literal (MessageFormat drops nothing silently)
             if lo_i is not None and n < lo_i:
-                self._err(errors, path, "minLength",
-                          render_message("MIN_LENGTH", lo_i, n))
+                self._err(errors, path, "minLength", "MIN_LENGTH", lo_i, n)
                 return False
             if hi_i is not None and n > hi_i:
-                self._err(errors, path, "maxLength",
-                          render_message("MAX_LENGTH", hi_i, n))
+                self._err(errors, path, "maxLength", "MAX_LENGTH", hi_i, n)
                 return False
             return True
 
@@ -736,8 +747,7 @@ class _Compiler:
                 return True
             # FormatCompiler.java:109: args = (instance NODE, format) —
             # the node renders with its JSON quotes
-            self._err(errors, path, "format", render_message(
-                "FORMAT", jackson_to_string(inst), name))
+            self._err(errors, path, "format", "FORMAT", inst, name)
             return False
 
         return kv
@@ -761,23 +771,21 @@ class _Compiler:
                     # ContentUtils.java:36-41: arg = the contentEncoding
                     # keyword value
                     self._err(errors, path, "contentEncoding",
-                              render_message("CONTENT_ENCODING", encoding))
+                              "CONTENT_ENCODING", encoding)
                     return False
             parsed = None
             have_parsed = False
             if media is not None:
                 if text is None:
                     self._err(errors, path, "contentMediaType",
-                              render_message("CONTENT_TYPE",
-                                             mime_type_str(media)))
+                              "CONTENT_TYPE", media)
                     return False
                 ok, parsed = content_mod.parse_media_type(media, text, mt_over)
                 if not ok:
                     # ContentUtils.java:46-51: arg = the parsed MimeType
                     # OBJECT, rendered via its debug toString()
                     self._err(errors, path, "contentMediaType",
-                              render_message("CONTENT_TYPE",
-                                             mime_type_str(media)))
+                              "CONTENT_TYPE", media)
                     return False
                 # JSON null parses to None and must still reach the
                 # subschema — gate on "a parser exists", not on the value
@@ -787,8 +795,7 @@ class _Compiler:
                 if not ok:
                     if errs and errors is not None:
                         errors.extend(errs)
-                    self._err(errors, path, "contentSchema",
-                              render_message("CONTENT_SCHEMA"))
+                    self._err(errors, path, "contentSchema", "CONTENT_SCHEMA")
                     return False
             return True
 
@@ -811,8 +818,7 @@ class _Compiler:
             # RequiredCompiler.java:40,52-54: ONE error joining every
             # missing name — in the HashSet's iteration order
             # (Collectors.toSet()), not declaration order
-            self._err(errors, path, "required",
-                      render_message("REQUIRED", ",".join(missing)))
+            self._err(errors, path, "required", "REQUIRED", ",".join(missing))
             return False
 
         return kv
@@ -827,12 +833,10 @@ class _Compiler:
             n = len(inst)
             # Min/MaxPropertiesCompiler.java:41-43: args = (limit, size)
             if lo_i is not None and n < lo_i:
-                self._err(errors, path, "minProperties",
-                          render_message("MIN_PROPERTIES", lo_i, n))
+                self._err(errors, path, "minProperties", "MIN_PROPERTIES", lo_i, n)
                 return False
             if hi_i is not None and n > hi_i:
-                self._err(errors, path, "maxProperties",
-                          render_message("MAX_PROPERTIES", hi_i, n))
+                self._err(errors, path, "maxProperties", "MAX_PROPERTIES", hi_i, n)
                 return False
             return True
 
@@ -852,14 +856,13 @@ class _Compiler:
                 # DependentRequiredCompiler.java:55-59: ONE error
                 # joining the TRIGGERING property of every violated
                 # rule (not the missing names)
-                self._err(errors, path, kw, render_message(
-                    "DEPENDENT_REQUIRED", ",".join(violated)))
+                self._err(errors, path, kw, "DEPENDENT_REQUIRED",
+                          ",".join(violated))
             else:
                 # draft-7 dual form (DependenciesCompiler.java:148-153):
                 # one error PER violated triggering property
                 for k in violated:
-                    self._err(errors, path, kw,
-                              render_message("DEPENDENCIES", k))
+                    self._err(errors, path, kw, "DEPENDENCIES", k)
             return False
 
         return kv
@@ -891,12 +894,13 @@ class _Compiler:
             for k in inst:
                 s_ok, errs, _ = sub(k, path + (k,), scope)
                 if not s_ok:
-                    self._err(errors, path + (k,), "propertyNames", f"invalid property name {k!r}")
-                    if errs and errors is not None:
-                        errors.extend(errs)
-                    ok = False
                     if errors is None:
                         return False
+                    ok = False
+                    self._err(errors, path + (k,), "propertyNames", None,
+                              f"invalid property name {k!r}")
+                    if errs:
+                        errors.extend(errs)
             return ok
 
         return kv
@@ -958,7 +962,7 @@ class _Compiler:
                         s_ok, errs, _ = add_sub(v, path + (k,), scope)
                         if not s_ok:
                             self._err(errors, path + (k,), "additionalProperties",
-                                      f"additional property {k!r} invalid")
+                                      None, f"additional property {k!r} invalid")
                             if errs:
                                 errors.extend(errs)
                 elif add_sub is not None:
@@ -967,7 +971,8 @@ class _Compiler:
                         ok = False
                         if errors is None:
                             return False
-                        self._err(errors, path + (k,), "additionalProperties", f"additional property {k!r} invalid")
+                        self._err(errors, path + (k,), "additionalProperties", None,
+                                  f"additional property {k!r} invalid")
                         if errs:
                             errors.extend(errs)
                     else:
@@ -1058,7 +1063,7 @@ class _Compiler:
             # Error-surface only — the verdict is already false.
             s_ok, errs, _ = add_sub(v, path + (i,), scope)
             if not s_ok:
-                self._err(errors, path + (i,), "additionalItems",
+                self._err(errors, path + (i,), "additionalItems", None,
                           f"item {i} invalid against additionalItems")
                 if errs:
                     errors.extend(errs)
@@ -1135,11 +1140,9 @@ class _Compiler:
                 return True
             # ContainsCompilerFactory.java:84-88: args = (bound, matched)
             if n < lo_eff:
-                self._err(errors, path, "contains",
-                          render_message("CONTAINS_MIN", lo_eff, n))
+                self._err(errors, path, "contains", "CONTAINS_MIN", lo_eff, n)
             else:
-                self._err(errors, path, "maxContains",
-                          render_message("CONTAINS_MAX", hi, n))
+                self._err(errors, path, "maxContains", "CONTAINS_MAX", hi, n)
             return False
 
         return kv
@@ -1154,15 +1157,14 @@ class _Compiler:
             n = len(inst)
             if lo_i is not None and n < lo_i:
                 # MinItemsCompiler.java:39: args = (limit, size)
-                self._err(errors, path, "minItems",
-                          render_message("MIN_ITEMS", lo_i, n))
+                self._err(errors, path, "minItems", "MIN_ITEMS", lo_i, n)
                 return False
             if hi_i is not None and n > hi_i:
                 # MaxItemsCompiler.java:35 passes the KEYWORD as {0}
                 # and the limit as {1} — the actual size arg has no
                 # placeholder. Faithfully odd.
-                self._err(errors, path, "maxItems",
-                          render_message("MAX_ITEMS", "maxItems", hi_i, n))
+                self._err(errors, path, "maxItems", "MAX_ITEMS",
+                          "maxItems", hi_i, n)
                 return False
             return True
 
@@ -1182,8 +1184,8 @@ class _Compiler:
                 if k in seen:
                     # UniqueItemsCompiler.java:46: arg = the duplicate
                     # item's instance JsonPointer
-                    self._err(errors, path, "uniqueItems", render_message(
-                        "UNIQUE_ITEMS", _format_pointer(path + (i,))))
+                    self._err(errors, path, "uniqueItems", "UNIQUE_ITEMS",
+                              path + (i,))
                     return False
                 seen.add(k)
             return True
@@ -1329,16 +1331,18 @@ class _Compiler:
             for sub in subs:
                 s_ok, errs, s_ann = sub(inst, path, scope)
                 if s_ok:
+                    # a pass discards every branch's errors, so only
+                    # annotations make the later branches matter
+                    if ann is None:
+                        return True
                     any_ok = True
                     _ann_merge(ann, s_ann)
-                    if ann is None and errors is None:
-                        return True  # fast path may short-circuit
                 elif errs:
                     all_errs.extend(errs)
             if not any_ok:
                 if errors is not None:
                     errors.extend(all_errs)
-                self._err(errors, path, "anyOf", render_message("ANY_OF"))
+                self._err(errors, path, "anyOf", "ANY_OF")
             return any_ok
 
         return kv
@@ -1359,8 +1363,8 @@ class _Compiler:
             if n_ok == 1:
                 _ann_merge(ann, ok_ann)
                 return True
-            self._err(errors, path, "oneOf", render_message(
-                "ONE_OF_EMPTY" if n_ok == 0 else "ONE_OF_MORE_THAN_ONE"))
+            self._err(errors, path, "oneOf",
+                      "ONE_OF_EMPTY" if n_ok == 0 else "ONE_OF_MORE_THAN_ONE")
             return False
 
         return kv
@@ -1371,7 +1375,7 @@ class _Compiler:
         def kv(inst, path, scope, ann, errors):
             s_ok, _, _ = sub(inst, path, scope)
             if s_ok:
-                self._err(errors, path, "not", render_message("NOT"))
+                self._err(errors, path, "not", "NOT")
                 return False
             return True
 
@@ -1396,7 +1400,7 @@ class _Compiler:
                     return True
                 if errs and errors is not None:
                     errors.extend(errs)
-                self._err(errors, path, "then", "'then' schema failed")
+                self._err(errors, path, "then", None, "'then' schema failed")
                 return False
             if else_sub is None:
                 return True
@@ -1406,7 +1410,7 @@ class _Compiler:
                 return True
             if errs and errors is not None:
                 errors.extend(errs)
-            self._err(errors, path, "else", "'else' schema failed")
+            self._err(errors, path, "else", None, "'else' schema failed")
             return False
 
         return kv
@@ -1436,7 +1440,8 @@ class _Compiler:
                             return False
                         if errs:
                             errors.extend(errs)
-                        self._err(errors, path, kw, f"schema dependency on {k!r} failed")
+                        self._err(errors, path, kw, None,
+                                  f"schema dependency on {k!r} failed")
             return ok
 
         return kv
@@ -1462,7 +1467,8 @@ class _Compiler:
                     ok = False
                     if errors is None:
                         return False
-                    self._err(errors, path + (i,), "unevaluatedItems", f"unevaluated item at {i} invalid")
+                    self._err(errors, path + (i,), "unevaluatedItems", None,
+                              f"unevaluated item at {i} invalid")
                     if errs:
                         errors.extend(errs)
             if ok:
@@ -1488,7 +1494,8 @@ class _Compiler:
                     ok = False
                     if errors is None:
                         return False
-                    self._err(errors, path + (k,), "unevaluatedProperties", f"unevaluated property {k!r} invalid")
+                    self._err(errors, path + (k,), "unevaluatedProperties", None,
+                              f"unevaluated property {k!r} invalid")
                     if errs:
                         errors.extend(errs)
                 else:
@@ -1506,6 +1513,34 @@ def _format_pointer(path: tuple) -> str:
     return "/" + "/".join(str(p).replace("~", "~0").replace("/", "~1") for p in path)
 
 
+# the JSON type of an instance whose Python type alone decides it;
+# numbers (int/Decimal/float, integer-ness) go through type_matches
+_EXACT_TYPE_NAMES = {str: "string", dict: "object", list: "array",
+                     bool: "boolean", type(None): "null"}
+
+# how the kernel's raw error arguments become MessageFormat args, per
+# message kind: JsonNode args render as Jackson toString() or asText(),
+# the contentMediaType as its MimeType, uniqueItems' as a pointer
+# (the compilers cited at each _err call); the other args render as given
+_ARG_RENDER = {
+    "TYPE": (jackson_as_text, jackson_to_string),
+    "FORMAT": (jackson_to_string,),
+    "CONTENT_TYPE": (mime_type_str,),
+    "UNIQUE_ITEMS": (_format_pointer,),
+    **{k: (jackson_to_string, jackson_to_string) for k in (
+        "ENUM", "CONST", "MINIMUM", "MAXIMUM", "EXCLUSIVE_MINIMUM",
+        "EXCLUSIVE_MAXIMUM", "MULTIPLE_OF")},
+}
+
+
+def _message(kind: Optional[str], args: tuple) -> str:
+    if kind is None:
+        return args[0]
+    conv = _ARG_RENDER.get(kind, ())
+    return render_message(kind, *(f(a) for f, a in zip(conv, args)),
+                          *args[len(conv):])
+
+
 class CompiledSchema:
     """Immutable compiled schema: compile once on the driver, apply many
     times (rows / Arrow batches) — the Spark analogue of the reference's
@@ -1519,7 +1554,8 @@ class CompiledSchema:
     def validate(self, instance: Any) -> tuple[bool, list[tuple[str, str, str]]]:
         """Validate a parsed JSON value → (ok, [(json_pointer, keyword, message)])."""
         ok, errors, _ = self._v(instance, (), ())
-        out = [(_format_pointer(p), kw, msg) for p, kw, msg in (errors or [])]
+        out = [(_format_pointer(p), kw, _message(kind, args))
+               for p, kw, kind, args in (errors or ())]
         return ok, out
 
     def is_valid(self, instance: Any) -> bool:

@@ -161,3 +161,155 @@ def test_identity_registration_per_dialect(schema, data, dialect, expected):
     except (RegErr, ValErr):
         got = "c"
     assert got == expected, f"{schema} {data!r}"
+
+
+_S2019 = "https://json-schema.org/draft/2019-09/schema"
+_S2020 = "https://json-schema.org/draft/2020-12/schema"
+_E = "https://example.com/"
+# anyOf whose SECOND branch supplies the annotation an unevaluated*
+# keyword reads: {"a":1,"b":2} is valid only if both branches run
+_ANY_PROPS = {"anyOf": [{"properties": {"a": True}}, {"properties": {"b": True}}],
+              "unevaluatedProperties": False}
+
+
+def _any_items(draft):
+    key = "prefixItems" if draft == _S2020 else "items"
+    return {"anyOf": [{key: [True]}, {key: [True, True]}], "unevaluatedItems": False}
+
+
+def _ref_case(draft):
+    """unevaluated* only behind a $ref into other registry documents."""
+    docs = {_E + "props.json": {"$schema": draft, "$id": _E + "props.json", **_ANY_PROPS},
+            _E + "items.json": {"$schema": draft, "$id": _E + "items.json",
+                                **_any_items(draft)}}
+    root = {"$schema": draft, "properties": {
+        "p": {"$ref": _E + "props.json"}, "i": {"$ref": _E + "items.json"}}}
+    return docs, root, ['{"p":{"a":1,"b":2},"i":[1,2]}', '{"p":{"b":2}}',
+                        '{"p":{"a":1,"c":3}}', '{"i":[1,2,3]}', '{"p":[],"i":{}}']
+
+
+def _dynamic_case():
+    """unevaluatedProperties only where a $dynamicRef lands: tree.json's
+    child resolves, through the dynamic scope, to the root resource's
+    "node" anchor."""
+    docs = {_E + "tree.json": {"$schema": _S2020, "$id": _E + "tree.json",
+                               "$dynamicAnchor": "node", "type": "object",
+                               "properties": {"child": {"$dynamicRef": "#node"}}}}
+    root = {"$schema": _S2020, "$id": _E + "strict.json", "$ref": "tree.json",
+            "$defs": {"node": {"$dynamicAnchor": "node", **_ANY_PROPS}}}
+    return docs, root, ['{"child":{"a":1,"b":2}}', '{"child":{"b":2},"x":0}',
+                        '{"child":{"a":1,"c":3}}', '{"child":5}']
+
+
+def _recursive_case():
+    """2019-09's counterpart: tree.json's child reaches the root's
+    unevaluatedProperties only through $recursiveRef."""
+    docs = {_E + "tree2019.json": {"$schema": _S2019, "$id": _E + "tree2019.json",
+                                   "$recursiveAnchor": True, "type": "object",
+                                   "properties": {"child": {"$recursiveRef": "#"}}}}
+    root = {"$schema": _S2019, "$id": _E + "strict2019.json",
+            "$recursiveAnchor": True, "$ref": "tree2019.json", **_ANY_PROPS}
+    return docs, root, ['{"child":{"a":1,"b":2},"b":0}', '{"child":{"b":{"a":1}}}',
+                        '{"child":{"c":3}}', '{"a":1,"child":{"child":{"x":1}}}']
+
+
+_UNEVAL_CASES = {
+    "2019-09-ref": lambda: _ref_case(_S2019),
+    "2020-12-ref": lambda: _ref_case(_S2020),
+    "2020-12-dynamicRef": _dynamic_case,
+    "2019-09-recursiveRef": _recursive_case,
+}
+
+
+def _uneval_case(name):
+    docs, root, instances = _UNEVAL_CASES[name]()
+    reg = SchemaRegistry()
+    for uri, doc in docs.items():
+        reg.add(doc, uri)
+    return reg, root, instances
+
+
+# the verdicts and errors of each case's documents
+_UNEVAL_WANT = {
+    '2019-09-recursiveRef': [
+        (True, []),
+        (True, []),
+        (False, [
+            ('/child/c', 'unevaluatedProperties', "unevaluated property 'c' invalid"),
+            ('/child/c', 'false', 'Because schema is false'),
+            ('/child', 'unevaluatedProperties', "unevaluated property 'child' invalid"),
+            ('/child', 'false', 'Because schema is false'),
+        ]),
+        (False, [
+            ('/child/child/x', 'unevaluatedProperties', "unevaluated property 'x' invalid"),
+            ('/child/child/x', 'false', 'Because schema is false'),
+            ('/child/child', 'unevaluatedProperties', "unevaluated property 'child' invalid"),
+            ('/child/child', 'false', 'Because schema is false'),
+            ('/child', 'unevaluatedProperties', "unevaluated property 'child' invalid"),
+            ('/child', 'false', 'Because schema is false'),
+        ]),
+    ],
+    '2019-09-ref': [
+        (True, []),
+        (True, []),
+        (False, [
+            ('/p/c', 'unevaluatedProperties', "unevaluated property 'c' invalid"),
+            ('/p/c', 'false', 'Because schema is false'),
+        ]),
+        (False, [
+            ('/i/2', 'unevaluatedItems', 'unevaluated item at 2 invalid'),
+            ('/i/2', 'false', 'Because schema is false'),
+        ]),
+        (True, []),
+    ],
+    '2020-12-dynamicRef': [
+        (True, []),
+        (True, []),
+        (False, [
+            ('/child/c', 'unevaluatedProperties', "unevaluated property 'c' invalid"),
+            ('/child/c', 'false', 'Because schema is false'),
+        ]),
+        (True, []),
+    ],
+    '2020-12-ref': [
+        (True, []),
+        (True, []),
+        (False, [
+            ('/p/c', 'unevaluatedProperties', "unevaluated property 'c' invalid"),
+            ('/p/c', 'false', 'Because schema is false'),
+        ]),
+        (False, [
+            ('/i/2', 'unevaluatedItems', 'unevaluated item at 2 invalid'),
+            ('/i/2', 'false', 'Because schema is false'),
+        ]),
+        (True, []),
+    ],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_UNEVAL_CASES))
+def test_unevaluated_behind_registry_refs_kernel(name):
+    """An unevaluated* keyword reached only through a $ref into another
+    registry document, or only where a $dynamicRef/$recursiveRef lands,
+    still sees the annotations of every anyOf branch, in the
+    collecting and the verdict-only kernel."""
+    reg, root, docs = _uneval_case(name)
+    want = _UNEVAL_WANT[name]
+    kernel = compile_schema(root, registry=reg)
+    assert [kernel.validate_json(d) for d in docs] == want
+    assert [kernel.is_valid_json(d) for d in docs] == [ok for ok, _ in want]
+    reg, root, _ = _uneval_case(name)
+    verdicts = compile_schema(root, registry=reg, config=CompileConfig(
+        collect_errors=False))
+    assert [verdicts.is_valid_json(d) for d in docs] == [ok for ok, _ in want]
+
+
+def test_unevaluated_behind_registry_refs_udf(spark):
+    """The same cases through the kernel UDF give the same rows."""
+    for name in sorted(_UNEVAL_CASES):
+        reg, root, docs = _uneval_case(name)
+        df = spark.createDataFrame(list(enumerate(docs)), "i int, doc string")
+        out = SparkValidator(root, registry=reg, engine="udf").apply_json(df, "doc")
+        got = [(r["valid"], [tuple(v) for v in r["violations"]])
+               for r in out.orderBy("i").collect()]
+        assert got == _UNEVAL_WANT[name], name

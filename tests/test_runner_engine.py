@@ -202,3 +202,145 @@ def test_kernel_violation_text_utf8_after_replacement(keyword):
         assert encodable(_utf8(t))
         assert _utf8(t).count("?") - t.count("?") == sum(
             "\ud800" <= c <= "\udfff" for c in t)
+
+
+# The fallback workload's shape: document fields that compile to
+# Columns, and tags behind a recursive $ref (a tag is a string or a
+# nested tag list), each checked against anyOf [string, $ref tagList].
+_TAG_SCHEMA = {
+    "$schema": "http://json-schema.org/draft-07/schema#",
+    "type": "object",
+    "required": ["repo", "path", "commit", "lang", "tokens", "tags"],
+    "properties": {
+        "repo": {"type": "string", "pattern": "^org[0-9]+/repo[0-9]+$"},
+        "path": {"type": "string", "maxLength": 512},
+        "commit": {"type": "string", "pattern": "^[0-9a-f]{40}$"},
+        "lang": {"enum": ["python", "java", "go"]},
+        "tokens": {"type": "integer", "minimum": 16, "maximum": 120},
+        "tags": {"$ref": "#/definitions/tagList"},
+    },
+    "definitions": {
+        "tagList": {"type": "array", "items": {"$ref": "#/definitions/tag"},
+                    "uniqueItems": True},
+        "tag": {"anyOf": [{"type": "string"}, {"$ref": "#/definitions/tagList"}]},
+    },
+}
+
+_TAG_DOCS = [
+    '{"repo":"org1/repo2","path":"a.py","commit":"%s","lang":"python",'
+    '"tokens":%s,"tags":%s}' % ("0f" * 20, tokens, tags)
+    for tokens, tags in [
+        (40, '["io","net"]'),
+        (121, '["io","net"]'),              # maximum
+        (40, '["io","io"]'),                # uniqueItems
+        (40, '["io",["net","db"]]'),        # nested tag list
+        (40, '["io",["net","net"]]'),       # nested uniqueItems
+        (40, '["io",7]'),                   # a tag neither string nor list
+        (3, '[1,["x",{}]]'),
+    ]
+] + ['{"repo":"x","tags":["io"]}', '{"tags":"io"}']
+
+
+@pytest.fixture
+def render_count(monkeypatch):
+    """Counts the kernel's ``render_message`` calls."""
+    import json_schema_spark.core.validator as kernel_mod
+
+    calls = []
+    render = kernel_mod.render_message
+
+    def counting(*args):
+        calls.append(args[0])
+        return render(*args)
+
+    monkeypatch.setattr(kernel_mod, "render_message", counting)
+    return calls
+
+
+def test_verdict_only_kernel_renders_no_message(render_count):
+    """``is_valid_json`` decides without rendering a message, in the
+    verdict-only kernel the UDF uses and in the collecting one."""
+    for collect in (False, True):
+        kernel = compile_schema(_TAG_SCHEMA, config=CompileConfig(
+            collect_errors=collect))
+        verdicts = [kernel.is_valid_json(d) for d in _TAG_DOCS]
+        assert verdicts == [True, False, False, True, False, False, False,
+                            False, False]
+    assert render_count == []
+
+
+def test_kernel_renders_only_the_errors_it_returns(render_count):
+    """``validate_json`` renders one message per returned error: the
+    errors of anyOf branches that a passing branch discards are never
+    rendered."""
+    kernel = compile_schema(_TAG_SCHEMA)
+    errors = [e for d in _TAG_DOCS for e in kernel.validate_json(d)[1]]
+    assert len(errors) == 21
+    assert len(render_count) == len(errors)
+
+
+def test_string_tag_never_enters_the_tag_list_branch(monkeypatch):
+    """anyOf stops at its first passing branch when no unevaluated*
+    keyword reads annotations: a string tag passes ``type: string`` and
+    the ``$ref tagList`` branch is never entered."""
+    from json_schema_spark.core.validator import _Compiler
+
+    entered = []
+    build = _Compiler._build
+
+    def counting_build(self, node):
+        fn = build(self, node)
+        if node != _TAG_SCHEMA["definitions"]["tagList"]:
+            return fn
+
+        def entry(inst, path, scope):
+            if isinstance(inst, str) and len(path) > 1:  # a tag, not /tags
+                entered.append(path)
+            return fn(inst, path, scope)
+
+        return entry
+
+    monkeypatch.setattr(_Compiler, "_build", counting_build)
+    for collect in (False, True):
+        kernel = compile_schema(_TAG_SCHEMA, config=CompileConfig(
+            collect_errors=collect))
+        for d in _TAG_DOCS:
+            kernel.is_valid_json(d)
+            kernel.validate_json(d)
+    assert entered == []
+
+
+@pytest.mark.parametrize("doc", [
+    '\ufeff{"a":1}',  # a leading BOM
+    "NaN",
+    '{"a":NaN}',
+    "[" * 100_000 + "]" * 100_000,  # nested past the recursion limit
+    '{"a":' * 100_000 + "1" + "}" * 100_000,
+])
+def test_unparseable_document_is_parse_invalid(doc):
+    """The kernel's one shared JSON decoder rejects what Jackson
+    rejects: the document is ``$parse``-invalid in both kernels."""
+    for collect in (False, True):
+        kernel = compile_schema({}, config=CompileConfig(collect_errors=collect))
+        assert kernel.is_valid_json(doc) is False
+        assert kernel.validate_json(doc) == (
+            False, [("", "$parse", "not parseable JSON")])
+
+
+def test_annotations_tracked_for_validators_compiled_before_unevaluated():
+    """One compiler builds a subschema first and, later, a schema whose
+    unevaluatedProperties reads that subschema's annotations (the
+    typed compiler's propertyNames kernel compiles subschemas one by
+    one like this): the earlier validator still reports them."""
+    from json_schema_spark.core.registry import SchemaRegistry
+    from json_schema_spark.core.validator import _Compiler
+
+    props = {"properties": {"a": True}}
+    strict = {"allOf": [props], "unevaluatedProperties": False}
+    reg = SchemaRegistry(default_dialect="2020-12")
+    reg.add({"$defs": {"p": props, "s": strict}}, "https://example.com/s.json")
+    comp = _Compiler(reg, CompileConfig(dialect="2020-12"))
+    assert comp.compile_node(props)({"a": 1}, (), ())[0] is True
+    fn = comp.compile_node(strict)
+    assert fn({"a": 1}, (), ())[0] is True
+    assert fn({"b": 1}, (), ())[0] is False
