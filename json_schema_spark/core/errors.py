@@ -107,6 +107,8 @@ KEYWORD_TO_KIND: dict[str, ErrorKind] = {
     "unevaluatedProperties": ErrorKind.UNEVALUATED_PROPERTIES,
     "unevaluatedItems": ErrorKind.UNEVALUATED_ITEMS,
     "$ref": ErrorKind.REF,
+    "$recursiveRef": ErrorKind.REF,
+    "$dynamicRef": ErrorKind.REF,
 }
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import decimal
 import json
+import operator
 import re
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
@@ -142,6 +143,13 @@ _UNEVAL_PROPS_ABSORBS = frozenset((
     "$ref", "$recursiveRef", "$dynamicRef", "properties",
     "allOf", "anyOf", "oneOf", "not", "if", "dependentSchemas",
 ))
+
+# number bound keyword -> (message kind, instance-vs-bound test), in the
+# order the keyword loop compiles them
+_BOUNDS = {"minimum": ("MINIMUM", operator.ge),
+           "maximum": ("MAXIMUM", operator.le),
+           "exclusiveMinimum": ("EXCLUSIVE_MINIMUM", operator.gt),
+           "exclusiveMaximum": ("EXCLUSIVE_MAXIMUM", operator.lt)}
 
 
 def _absorb_group(absorbed, uneval_check, json_type):
@@ -308,9 +316,9 @@ class _Compiler:
             add(self._kw_enum(node["enum"]))
         if "const" in node:
             add(self._kw_const(node["const"]))
-        for kw in ("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum"):
-            if kw in node:
-                add(self._kw_number_bound(kw, node[kw]))
+        bounds = [(kw, node[kw]) for kw in _BOUNDS if kw in node]
+        if bounds:
+            add(self._kw_number_bounds(bounds))
         if "multipleOf" in node:
             add(self._kw_multiple_of(node["multipleOf"]))
         if "pattern" in node:
@@ -587,32 +595,28 @@ class _Compiler:
 
         return kv
 
-    def _kw_number_bound(self, kw: str, arg: Any) -> Callable:
+    def _kw_number_bounds(self, bounds: list) -> Callable:
+        """``minimum``/``maximum``/``exclusiveMinimum``/``exclusiveMaximum``
+        of one subschema as one validator: the instance is type-checked
+        and converted once, and the bounds are tested in keyword order."""
         # draft-04 boolean exclusive* forms are not supported (reference
         # supports drafts 7+ only)
-        bound = to_decimal(arg)
-        op = {
-            "minimum": lambda v: v >= bound,
-            "maximum": lambda v: v <= bound,
-            "exclusiveMinimum": lambda v: v > bound,
-            "exclusiveMaximum": lambda v: v < bound,
-        }[kw]
+        tests = tuple((kw, *_BOUNDS[kw], to_decimal(arg), arg) for kw, arg in bounds)
 
-        kind = {
-            "minimum": "MINIMUM", "maximum": "MAXIMUM",
-            "exclusiveMinimum": "EXCLUSIVE_MINIMUM",
-            "exclusiveMaximum": "EXCLUSIVE_MAXIMUM",
-        }[kw]
-
-        def kv(inst, path, scope, ann, errors, _arg=arg):
+        def kv(inst, path, scope, ann, errors):
             if not is_number(inst):
                 return True  # type-gated no-op (BaseNumberCompiler.java:28-31)
-            if op(to_decimal(inst)):
-                return True
-            # MaximumCompiler.java:33 etc: args = (instance node,
-            # schema node)
-            self._err(errors, path, kw, kind, inst, _arg)
-            return False
+            v = to_decimal(inst)
+            ok = True
+            for kw, kind, op, bound, arg in tests:
+                if not op(v, bound):
+                    if errors is None:
+                        return False
+                    # MaximumCompiler.java:33 etc: args = (instance
+                    # node, schema node)
+                    self._err(errors, path, kw, kind, inst, arg)
+                    ok = False
+            return ok
 
         return kv
 

@@ -23,6 +23,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import install_zip_cache_check
+
 __all__ = ["partition_ledger", "global_digest"]
 
 LEDGER_SCHEMA = (
@@ -115,6 +117,7 @@ def partition_ledger(validated: DataFrame, key_col: str = "row_id",
         # share, so SUM(elapsed_ms) over the ledger equals total
         # partition wall clock (duplicating the full clock onto every
         # bucket over-counted the sum).
+        install_zip_cache_check()
         t0 = time.perf_counter()
         acc: dict[int, list] = {}  # pid -> [rows, valid, viol_rows, viols, lines]
         for pdf in batches:

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..core.registry import SchemaRegistry
 from ..core.validator import (CompileConfig, CompiledSchema,
                               SchemaCompileError, compile_schema)
+from ..session import install_zip_cache_check
 from .compiler import (
     Check,
     ExprUnsupported,
@@ -57,6 +58,7 @@ _KERNEL_CACHE: dict[tuple[str, bool], CompiledSchema] = {}
 def _executor_kernel(key: str, spec: bytes, collect: bool) -> CompiledSchema:
     k = _KERNEL_CACHE.get((key, collect))
     if k is None:
+        install_zip_cache_check()  # this worker's later tasks start sooner
         schema, docs, config = cloudpickle.loads(spec)
         reg = SchemaRegistry(default_dialect=config.dialect)
         for uri, doc in docs.items():

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the validation workload.
+"""SparkSession factory tuned for the validation workload, and the
+set-up of the Python workers that run the fallback kernel.
 
 Defaults follow the local-mode guidance in the public Spark docs:
 AQE on, Arrow on, shuffle partitions sized to cores (not 200).
@@ -9,10 +10,44 @@ On a real cluster the same builder args apply unchanged; only
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "default_driver_memory"]
+__all__ = ["get_spark", "default_driver_memory", "install_zip_cache_check"]
+
+
+def install_zip_cache_check() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its ``(st_mtime_ns, st_size)`` changed since that importer
+    last read it. Idempotent; called from the executor entry points,
+    never at import time.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before
+    every task, and before Python 3.13 each cached zipimporter then
+    re-parses its archive's whole central directory in pure Python:
+    16 importers over ``pyspark.zip``, the py4j zip and the Spark core
+    jar, 0.15-0.4 s per task before the first Arrow batch. A changed
+    or unseen archive is still re-read, so stale entries never serve."""
+    if sys.version_info >= (3, 13):  # zipimport re-reads lazily there
+        return
+    eager = zipimport.zipimporter.invalidate_caches
+    if getattr(eager, "stat_checked", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or self.__dict__.get("_read_stamp") != stamp:
+            eager(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def default_driver_memory(physical_bytes: int | None = None) -> str:

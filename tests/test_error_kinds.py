@@ -27,12 +27,16 @@ def test_reference_kinds_all_present():
 def test_every_emitted_keyword_maps():
     """Every keyword string either engine emits in violation rows must
     map to a non-OTHER kind — grep both engines for _err/Check keyword
-    literals and check the table covers them."""
+    literals, and the kernel's direct ``errors.append((path, "<kw>",``
+    calls, and check the table covers them."""
     import pathlib
 
     src = pathlib.Path("json_schema_spark")
     kernel = (src / "core" / "validator.py").read_text()
     emitted = set(re.findall(r'self\._err\(errors, [^,]+, "([^"]+)"', kernel))
+    appended = set(re.findall(r'errors\.append\(\([^,]+, "([^"]+)"', kernel))
+    assert {"$recursiveRef", "$dynamicRef"} <= appended
+    emitted |= appended
     expr = (src / "plans" / "compiler.py").read_text()
     emitted |= set(re.findall(r'Check\([^)]*?, "([^"]+)",', expr))
     emitted |= {"$parse"}

@@ -4,6 +4,7 @@ and a verdict does not depend on the session's duplicate-key setting."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -344,3 +345,80 @@ def test_annotations_tracked_for_validators_compiled_before_unevaluated():
     fn = comp.compile_node(strict)
     assert fn({"a": 1}, (), ())[0] is True
     assert fn({"b": 1}, (), ())[0] is False
+
+
+def test_number_bounds_convert_each_instance_once(monkeypatch):
+    """``minimum``/``maximum``/``exclusiveMinimum``/``exclusiveMaximum``
+    of one subschema convert a number instance once, report their
+    errors in keyword order, and a verdict-only kernel still decides."""
+    import json_schema_spark.core.validator as kernel_mod
+
+    schema = {"minimum": 5, "maximum": 3, "exclusiveMinimum": 4,
+              "exclusiveMaximum": 10}
+    collecting, verdict_only = (
+        compile_schema(schema, config=CompileConfig(collect_errors=c))
+        for c in (True, False))
+    tags = compile_schema(_TAG_SCHEMA)
+    calls = []
+    to_decimal = kernel_mod.to_decimal
+
+    def counting(v):
+        calls.append(v)
+        return to_decimal(v)
+
+    monkeypatch.setattr(kernel_mod, "to_decimal", counting)
+    ok, errors = collecting.validate_json("4")
+    assert not ok
+    assert [kw for _, kw, _ in errors] == ["minimum", "maximum", "exclusiveMinimum"]
+    assert verdict_only.is_valid_json("4") is False
+    assert verdict_only.is_valid_json('"4"') is True
+    assert calls == [4, 4]
+    del calls[:]
+    assert [tags.is_valid_json(d) for d in _TAG_DOCS[:2]] == [True, False]
+    assert calls == [40, 121]  # tokens: one conversion for both bounds
+
+
+def test_kernel_worker_does_not_reread_unchanged_zips(spark):
+    """A Python worker that has run the kernel does not re-parse Spark's
+    zip archives before its next task. A probe UDF in the kernel's
+    projection (one ArrowEvalPython node, so one worker per task)
+    counts the ``zipimport._read_directory`` calls that
+    ``importlib.invalidate_caches()`` makes, the call PySpark's worker
+    makes before every task. Idle workers are taken in turn, so the
+    action repeats until a worker that ran the kernel comes back."""
+
+    def probe(docs: pd.Series) -> pd.DataFrame:
+        import importlib
+        import os
+        import zipimport
+
+        read, reads = zipimport._read_directory, []
+
+        def counting(path):
+            reads.append(path)
+            return read(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        return pd.DataFrame({"pid": [os.getpid()] * len(docs),
+                             "reads": [len(reads)] * len(docs)})
+
+    v = SparkValidator(_TAG_SCHEMA, engine="udf")
+    # a JVM-only source: createDataFrame(list) runs Python tasks itself
+    df = spark.range(1).select(F.explode(F.array(
+        *[F.lit(d) for d in _TAG_DOCS[:3]])).alias("doc")).coalesce(1)
+    out = v.apply_json(df, "doc", with_violations=False).withColumn(
+        "probe", F.pandas_udf(probe, "struct<pid:int,reads:int>")("doc"))
+    assert _plan(out).count("ArrowEvalPython") == 1
+    ran_kernel, repeats = set(), []
+    for _ in range(12):
+        rows = out.select("valid", "probe.*").collect()
+        assert [r["valid"] for r in rows] == [True, False, False]
+        repeats += [r["reads"] for r in rows if r["pid"] in ran_kernel]
+        if repeats:
+            break
+        ran_kernel |= {r["pid"] for r in rows}
+    assert repeats and set(repeats) == {0}, repeats
